@@ -39,7 +39,7 @@ ORACLES: dict[str, str] = {}
 #      tests/test_bare_session.py::GRADUATES; the repo session factory's
 #      confs (writer timestamp type, timezone, arrow flags) must not be
 #      load-bearing, or pin them inside the operator like
-#      catalog.load_table / snapshots._pin_writer_confs do;
+#      catalog.load_table / SnapshotTable._stage do;
 #   2. oracle-compare it at sf0.001/0.01/0.1 (tests/oracle.compare);
 #   3. confirm non-empty at the driver SF
 #      (test_registry_order.py::test_window_queries_nonempty_driver_sf);

@@ -57,20 +57,7 @@ _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
 
 
-def _pin_writer_confs(spark: SparkSession) -> None:
-    """Pin the runtime-settable WRITER confs the snapshot machinery depends
-    on, mirroring catalog.py's reader pins: snapshot tables must behave the
-    same under ANY externally built SparkSession, not just our own session
-    factory. Spark's default timestamp encoding is legacy INT96, which
-    writes NO parquet min/max statistics — under a vanilla session every
-    ts-clustered commit would silently lose footer stats and file-level
-    time pruning (keep-on-uncertainty keeps every file)."""
-    try:
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-    except Exception:
-        pass  # conf locked down externally: stats may be absent, reads stay correct
+_TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
 
 
 def _partitioned_writer(df: DataFrame, part_cols: list[str]):
@@ -83,6 +70,14 @@ def _partitioned_writer(df: DataFrame, part_cols: list[str]):
         return df.write
     out, names = with_partition_cols(df, part_cols)
     return out.write.partitionBy(*names)
+
+
+def _upsert_count(delete_col: str | None):
+    """``n_up``: the change-set rows a merge upserts. ``count_if(NOT
+    flag)`` counts exactly the rows ``filter(~flag)`` keeps — a NULL flag
+    is in neither (its key is removed, not upserted)."""
+    n = F.count_if(~F.col(delete_col)) if delete_col else F.count(F.lit(1))
+    return n.alias("n_up")
 
 
 def _drop_derived(df: DataFrame, part_cols: list[str]) -> DataFrame:
@@ -540,7 +535,6 @@ class CommitConflict(RuntimeError):
 
 class SnapshotTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
-        _pin_writer_confs(spark)
         self.spark = spark
         self.path = path
         self.snap_dir = os.path.join(path, _SNAP_DIR)
@@ -562,6 +556,38 @@ class SnapshotTable:
     def current_version(self) -> int:
         ms = self._manifests()
         return int(ms[-1][1:9]) if ms else 0
+
+    def _stage(self, writer) -> str:
+        """Write ``writer`` (a ``DataFrameWriter``) into a fresh staged
+        root under ``data/`` and return the root — the one path every
+        snapshot data write takes. The WRITER confs the snapshot machinery
+        depends on are pinned for this write only, mirroring catalog.py's
+        reader pins: snapshot tables must behave the same under ANY
+        externally built SparkSession, not just our own session factory.
+        Spark's default timestamp encoding is legacy INT96, which writes
+        NO parquet min/max statistics — under a vanilla session every
+        ts-clustered commit would silently lose footer stats and
+        file-level time pruning (keep-on-uncertainty keeps every file).
+        The caller's setting (or its absence) is restored afterwards, so
+        the session's confs are left exactly as found."""
+        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
+        conf = self.spark.conf
+        prev = conf.getAll.get(_TS_TYPE_CONF)
+        try:
+            conf.set(_TS_TYPE_CONF, "TIMESTAMP_MICROS")
+            pinned = True
+        except Exception:
+            # conf locked down externally: stats may be absent, reads
+            # stay correct
+            pinned = False
+        try:
+            writer.parquet(staged)
+        finally:
+            if pinned and prev is None:
+                conf.unset(_TS_TYPE_CONF)
+            elif pinned:
+                conf.set(_TS_TYPE_CONF, prev)
+        return staged
 
     def commit(
         self,
@@ -638,32 +664,10 @@ class SnapshotTable:
             sort_by = [
                 format_sort_field(sf) for sf in parse_sort_spec(list(sort_by))
             ]
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        out = df
-        if zorder_by:
-            if sort_by:
-                raise ValueError("zorder_by and sort_by are exclusive")
-            # multi-dimensional clustering: range-partition + sort on the
-            # Morton key so EVERY z-ordered column gets narrow per-file
-            # ranges (see zorder_key); stats recorded for all of them
-            nparts = max(df.rdd.getNumPartitions(), 1)
-            z = zorder_key(df, list(zorder_by))
-            out = (
-                df.withColumn("_z", z)
-                .repartitionByRange(nparts, F.col("_z"))
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        elif sort_by:
-            # range partition + in-file sort = disjoint per-file ranges;
-            # partition count follows the input so file sizing is stable
-            # (sort_exprs carries each field's DESC / NULLS placement)
-            nparts = max(df.rdd.getNumPartitions(), 1)
-            exprs = sort_exprs(sort_by, df)
-            out = df.repartitionByRange(nparts, *exprs).sortWithinPartitions(
-                *exprs
-            )
-        _partitioned_writer(out, partition_by or []).parquet(staged)
+        if zorder_by and sort_by:
+            raise ValueError("zorder_by and sort_by are exclusive")
+        out = self._recluster(df, {"sort_by": sort_by, "zorder_by": zorder_by})
+        staged = self._stage(_partitioned_writer(out, partition_by or []))
         new_files = _staged_parquet_files(staged)
         files = new_files if operation == "overwrite" else (
             parent_manifest.get("files", []) + new_files
@@ -797,8 +801,7 @@ class SnapshotTable:
                     f"clear spec names non-partition columns {bad}; "
                     f"partition columns are {pnames}"
                 )
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        _partitioned_writer(self._recluster(df, m), spec).parquet(staged)
+        staged = self._stage(_partitioned_writer(self._recluster(df, m), spec))
         new_files = _staged_parquet_files(staged)
         incoming = {_file_partition(f, self.data_dir, pnames) for f in new_files}
 
@@ -1034,11 +1037,19 @@ class SnapshotTable:
         FILE count so a small group (one scan partition locally) still
         splits into as many range-disjoint output files as it consumed,
         keeping per-file hulls narrow instead of collapsing the group
-        into one full-range file."""
+        into one full-range file. By default the partition count follows
+        the input, so file sizing is stable. An unclustered table returns
+        ``df`` untouched, before the partition count is asked for: that
+        question plans (and under AQE runs) the whole input plan."""
         sort_by = m.get("sort_by") or []
         zorder_by = m.get("zorder_by") or []
+        if not (sort_by or zorder_by):
+            return df
         nparts = max(nparts or df.rdd.getNumPartitions(), 1)
         if zorder_by:
+            # multi-dimensional clustering: range-partition + sort on the
+            # Morton key so EVERY z-ordered column gets narrow per-file
+            # ranges (see zorder_key)
             z = zorder_key(df, list(zorder_by))
             return (
                 df.withColumn("_z", z)
@@ -1046,12 +1057,10 @@ class SnapshotTable:
                 .sortWithinPartitions("_z")
                 .drop("_z")
             )
-        if sort_by:
-            exprs = sort_exprs(sort_by, df)
-            return df.repartitionByRange(nparts, *exprs).sortWithinPartitions(
-                *exprs
-            )
-        return df
+        # range partition + in-file sort = disjoint per-file ranges
+        # (sort_exprs carries each field's DESC / NULLS placement)
+        exprs = sort_exprs(sort_by, df)
+        return df.repartitionByRange(nparts, *exprs).sortWithinPartitions(*exprs)
 
     def set_properties(
         self,
@@ -1285,9 +1294,8 @@ class SnapshotTable:
                 "pending merge-on-read deltas; run compact_deltas() first"
             )
         applied = self._recluster(self.read(), m)
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         part_cols = m.get("partition_by") or []
-        _partitioned_writer(applied, part_cols).parquet(staged)
+        staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         stats = _footer_stats(new_files, cols) if cols else {}
@@ -1575,7 +1583,10 @@ class SnapshotTable:
         moves into the new snapshot by reference (Iceberg-style pruned
         CoW). Without stats the whole table rewrites (correct, logged in
         the manifest as full rewrite). The anti-join is key-partitioned;
-        nothing collects to the driver but the 2-value key range.
+        nothing collects to the driver but ONE four-value aggregate over
+        the change set — row count (0 ⇒ no-op), upsert count (the
+        manifest's ``added_rows``) and the leading key's min/max (file
+        pruning) — the merge's only Spark action before the write.
 
         ``mode='mor'`` is the merge-on-READ twin (Iceberg v2 equality
         deletes): the change set is written as a DELTA — an equality-
@@ -1606,7 +1617,19 @@ class SnapshotTable:
         if m.get("partition_by"):
             return self._merge_partitioned(m, changes, key_cols, delete_col)
 
-        if not changes.take(1):
+        # file pruning by the leading key's footer stats
+        k0 = key_cols[0]
+        stats = m.get("file_stats", {})
+        prune = all(f in stats and k0 in stats[f] for f in m["files"])
+        # every change-set fact the merge needs, in ONE pass: each action
+        # re-runs the change set's whole lineage (a CDC dedup window is a
+        # shuffle), so the empty test, the upsert count and the key range
+        # share one aggregate
+        aggs = [F.count(F.lit(1)).alias("n"), _upsert_count(delete_col)]
+        if prune:
+            aggs += [F.min(k0).alias("lo"), F.max(k0).alias("hi")]
+        summary = changes.agg(*aggs).collect()[0]
+        if not summary.n:
             # empty change set (e.g. a filtered/replayed CDC micro-batch):
             # a no-op, not a full-table rewrite plus a phantom version
             return parent
@@ -1614,30 +1637,24 @@ class SnapshotTable:
         upserts = changes
         if delete_col is not None:
             upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-        change_keys = changes.select(*key_cols).distinct()
+        # no distinct: a left-anti join keeps the same rows whether or not
+        # the keys repeat, and the distinct costs a shuffle
+        change_keys = changes.select(*key_cols)
 
-        # file pruning by the leading key's footer stats
-        k0 = key_cols[0]
-        stats = m.get("file_stats", {})
         affected, untouched = list(m["files"]), []
-        if all(f in stats and k0 in stats[f] for f in m["files"]):
-            rng = changes.agg(
-                F.min(k0).alias("lo"), F.max(k0).alias("hi")
-            ).collect()[0]
-            if rng.lo is not None:
-                # timestamp/date keys compare in the stats' stored ISO
-                # text form (r15, same fix as scan planning) — without
-                # it a datetime key hit the incomparable-⇒-keep path
-                # and pruned CoW silently rewrote the whole table
-                lo, hi = _probe_safe(rng.lo), _probe_safe(rng.hi)
-                affected, untouched = [], []
-                for f in m["files"]:
-                    if _range_overlaps(stats[f][k0], lo, hi):
-                        affected.append(f)
-                    else:
-                        untouched.append(f)
+        if prune and summary.lo is not None:
+            # timestamp/date keys compare in the stats' stored ISO text
+            # form (r15, same fix as scan planning) — without it a
+            # datetime key hit the incomparable-⇒-keep path and pruned
+            # CoW silently rewrote the whole table
+            lo, hi = _probe_safe(summary.lo), _probe_safe(summary.hi)
+            affected = []
+            for f in m["files"]:
+                if _range_overlaps(stats[f][k0], lo, hi):
+                    affected.append(f)
+                else:
+                    untouched.append(f)
 
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         kept = None
         if affected:
             # mergeSchema + schema ops: affected files may straddle an
@@ -1662,11 +1679,9 @@ class SnapshotTable:
             if kept is not None
             else upserts
         )
-        sort_by = m.get("sort_by") or []
         # preserve the table's clustering (sort_by OR zorder_by) through
         # the rewrite; untouched files keep theirs by reference
-        new_data = self._recluster(new_data, m)
-        new_data.write.parquet(staged)
+        staged = self._stage(self._recluster(new_data, m).write)
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         file_stats = {f: s for f, s in stats.items() if f in set(untouched)}
@@ -1677,12 +1692,12 @@ class SnapshotTable:
             operation="merge",
             files=untouched + new_files,
             added_files=len(new_files),
-            added_rows=upserts.count(),
+            added_rows=summary.n_up,
             partition_by=[],
             properties=dict(m.get("properties", {})),
             file_stats=file_stats,
             stats_cols=list(cols),
-            sort_by=sort_by,
+            sort_by=list(m.get("sort_by") or []),
             zorder_by=list(m.get("zorder_by") or []),
             schema_ops=list(m.get("schema_ops", [])),
         )
@@ -1702,10 +1717,8 @@ class SnapshotTable:
         upserts = changes
         if delete_col is not None:
             upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-        key_staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        changes.select(*key_cols).distinct().write.parquet(key_staged)
-        up_staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        upserts.write.parquet(up_staged)
+        key_staged = self._stage(changes.select(*key_cols).distinct().write)
+        up_staged = self._stage(upserts.write)
         # drop empty part files: each staged file becomes a delete- or
         # data-manifest entry and a per-read scan task (footer check only)
         up_files = [
@@ -1866,8 +1879,7 @@ class SnapshotTable:
         )
         if not doomed.take(1):
             return parent
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        doomed.write.parquet(staged)
+        staged = self._stage(doomed.write)
         # empty part files (idle partitions of the doomed frame) would
         # each become a delete-manifest entry — drop them (footer check,
         # no data scan); non-empty by the take(1) guard above
@@ -1906,9 +1918,8 @@ class SnapshotTable:
             return None
         applied = self._recluster(self.read(), m)
         sort_by = m.get("sort_by") or []
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         part_cols = m.get("partition_by") or []
-        _partitioned_writer(applied, part_cols).parquet(staged)
+        staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         stats = _footer_stats(new_files, cols) if cols else {}
@@ -1981,9 +1992,10 @@ class SnapshotTable:
                 base = base.join(keys, d["key_cols"], "left_anti")
         if has_pos:
             base = base.drop("_pos_file", "_pos_index")
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         part_cols = m.get("partition_by") or []
-        _partitioned_writer(self._recluster(base, m), part_cols).parquet(staged)
+        staged = self._stage(
+            _partitioned_writer(self._recluster(base, m), part_cols)
+        )
         new_files = [
             f for f in _staged_parquet_files(staged)
             if _footer_row_count([f]) > 0
@@ -3285,21 +3297,21 @@ class SnapshotTable:
                 "files as untouched — run compact() or OPTIMIZE first, or "
                 "use mode='mor'"
             )
-        if not changes.take(1):
+        # touched partitions key on the hive PATH fields: for transform
+        # specs the change rows get the same derived ts_day/id_bucket
+        # values the writer lands in paths, so classification agrees.
+        # ONE action over the change set (see merge()): the touched
+        # partitions with their upsert counts
+        ch, pnames = with_partition_cols(changes, part_cols)
+        groups = ch.groupBy(*pnames).agg(_upsert_count(delete_col)).collect()
+        if not groups:
             return m["version"]  # empty change set: no-op
+        touched = {_partition_key(r, pnames) for r in groups}
         upserts = changes
         if delete_col is not None:
             upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-        change_keys = changes.select(*key_cols).distinct()
-
-        # touched partitions key on the hive PATH fields: for transform
-        # specs the change rows get the same derived ts_day/id_bucket
-        # values the writer lands in paths, so classification agrees
-        ch, pnames = with_partition_cols(changes, part_cols)
-        touched = {
-            _partition_key(r, pnames)
-            for r in ch.select(*pnames).distinct().collect()
-        }
+        # no distinct: the anti-join keeps the same rows either way
+        change_keys = changes.select(*key_cols)
 
         affected = [
             f
@@ -3308,7 +3320,6 @@ class SnapshotTable:
         ]
         untouched = [f for f in m["files"] if f not in set(affected)]
 
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         kept = None
         if affected:
             # group by staged root so basePath recovers the partition cols
@@ -3339,7 +3350,7 @@ class SnapshotTable:
             new_data = new_data.sortWithinPartitions(
                 *sort_exprs(sort_by, new_data)
             )
-        _partitioned_writer(new_data, part_cols).parquet(staged)
+        staged = self._stage(_partitioned_writer(new_data, part_cols))
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         file_stats = {
@@ -3352,7 +3363,7 @@ class SnapshotTable:
             operation="merge",
             files=untouched + new_files,
             added_files=len(new_files),
-            added_rows=upserts.count(),
+            added_rows=sum(r.n_up for r in groups),
             partition_by=list(part_cols),
             properties=dict(m.get("properties", {})),
             file_stats=file_stats,
@@ -3403,7 +3414,6 @@ class SnapshotTable:
         keep = [f for f in m["files"] if f not in set(small)]
         total = sum(self._file_size(m, f) for f in small)
         n_out = max(1, total // small_file_bytes + (1 if total % small_file_bytes else 0))
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         # per-root unions when a widen op left mixed physical widths; the
         # journal itself is carried, so the rewrite stays raw-physical
         src = self._read_file_list(
@@ -3418,7 +3428,7 @@ class SnapshotTable:
             out = out.sortWithinPartitions(*exprs)
         else:
             out = src.coalesce(int(n_out))
-        out.write.parquet(staged)
+        staged = self._stage(out.write)
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         stats = {f: s for f, s in m.get("file_stats", {}).items() if f in set(keep)}
@@ -3468,8 +3478,7 @@ class SnapshotTable:
             self.read(), {**m, "sort_by": c_sort, "zorder_by": c_z}
         )
         part_cols = m.get("partition_by") or []
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        _partitioned_writer(applied, part_cols).parquet(staged)
+        staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         stats = _footer_stats(new_files, cols) if cols else {}
@@ -3526,7 +3535,6 @@ class SnapshotTable:
         cur = parts[0]
         for p in parts[1:]:
             cur = cur.unionByName(p)
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         # repartition BY the partition (path) fields — derived transform
         # columns attach first so each partition VALUE lands in one task
         # and the write emits one compacted file per partition (coalesce
@@ -3539,7 +3547,7 @@ class SnapshotTable:
         if sort_by:
             # each compacted per-partition file regains its in-file order
             out = out.sortWithinPartitions(*sort_exprs(sort_by, out))
-        out.write.partitionBy(*pnames).parquet(staged)
+        staged = self._stage(out.write.partitionBy(*pnames))
         new_files = _staged_parquet_files(staged)
         cols = m.get("stats_cols") or []
         stats = {f: s for f, s in m.get("file_stats", {}).items() if f in set(keep)}
@@ -3975,8 +3983,7 @@ class SnapshotTable:
         ``clustered_roots`` only when the applied order IS the declared
         one (``mark_clustered``)."""
         part_cols = m.get("partition_by") or []
-        staged = os.path.join(self.data_dir, uuid.uuid4().hex)
-        _partitioned_writer(out, part_cols).parquet(staged)
+        staged = self._stage(_partitioned_writer(out, part_cols))
         new_files = _staged_parquet_files(staged)
         keep = [f for f in m["files"] if f not in set(group)]
         cols = m.get("stats_cols") or []

@@ -7,6 +7,10 @@ latent driver-only failure. r16 shipped exactly that bug:
 the driver because Spark's default INT96 timestamps write no parquet
 stats.
 
+The converse holds too: snapshot writes pin the writer confs they need
+for the write only and leave the caller's session as they found it
+(test_snapshot_writes_leave_session_confs_unchanged, in-process).
+
 A truly bare session needs a fresh JVM (``getOrCreate`` inside this
 process would reuse the pytest session and its confs), so the smoke runs
 in a subprocess. Scope: the r16 tier-8 graduates — the queries whose
@@ -73,3 +77,48 @@ def test_window_graduates_run_under_bare_session(sf_dir):
     assert proc.returncode == 0, proc.stderr[-4000:]
     for name in GRADUATES:
         assert f"BARE_OK {name}" in proc.stdout, (name, proc.stdout)
+
+
+_TS_TYPE = "spark.sql.parquet.outputTimestampType"
+
+
+@pytest.mark.parametrize("prior", [None, "INT96"])
+def test_snapshot_writes_leave_session_confs_unchanged(spark, tmp_path, prior):
+    """A commit and a merge leave every session conf exactly as found,
+    whether the writer's timestamp type was unset (bare session) or set
+    by the caller — and the write still lands TIMESTAMP_MICROS, whose
+    footer stats the manifest records."""
+    import datetime as dt
+
+    from philotes_spark.sources.snapshots import SnapshotTable
+
+    saved = spark.conf.getAll.get(_TS_TYPE)
+    try:
+        if prior is None:
+            spark.conf.unset(_TS_TYPE)
+        else:
+            spark.conf.set(_TS_TYPE, prior)
+        before = dict(spark.conf.getAll)
+        t = SnapshotTable(spark, str(tmp_path / "t"))
+        rows = [(k, dt.datetime(2024, 1, 1 + k, 12)) for k in range(8)]
+        t.commit(
+            spark.createDataFrame(rows, "k long, ts timestamp").repartition(2),
+            stats_cols=["k", "ts"],
+        )
+        assert dict(spark.conf.getAll) == before
+        t.merge(
+            spark.createDataFrame(
+                [(3, dt.datetime(2024, 2, 1), False), (5, None, True)],
+                "k long, ts timestamp, _del boolean",
+            ),
+            key_cols=["k"],
+            delete_col="_del",
+        )
+        assert dict(spark.conf.getAll) == before
+        m = t._resolve()
+        assert all(st.get("ts") for st in m["file_stats"].values()), m
+    finally:
+        if saved is None:
+            spark.conf.unset(_TS_TYPE)
+        else:
+            spark.conf.set(_TS_TYPE, saved)

@@ -395,9 +395,10 @@ def test_ts_stats_written_under_vanilla_writer_conf(spark, tmp_path):
     that is not the repo's own factory (the driver builds its own), a
     ts-clustered commit silently lost every footer stat and time-range
     pruning kept all files. ``SnapshotTable`` must pin the writer conf
-    itself (``_pin_writer_confs``), exactly like catalog.py pins the
-    reader confs. Simulates the vanilla session by resetting the conf
-    to INT96 before constructing the table."""
+    itself around each data write (``SnapshotTable._stage``), exactly
+    like catalog.py pins the reader confs, and leave the session's own
+    setting as it found it. Simulates the vanilla session by resetting
+    the conf to INT96 before constructing the table."""
     import datetime as dt
 
     from philotes_spark.sources.snapshots import SnapshotTable
@@ -406,16 +407,15 @@ def test_ts_stats_written_under_vanilla_writer_conf(spark, tmp_path):
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     try:
         t = SnapshotTable(spark, str(tmp_path / "vanilla"))
-        # construction alone must have re-pinned the conf
-        assert (
-            spark.conf.get("spark.sql.parquet.outputTimestampType")
-            == "TIMESTAMP_MICROS"
-        )
         rows = [(dt.datetime(2024, 1, 1 + d, 12), d) for d in range(8)]
         t.commit(
             spark.createDataFrame(rows, "ts timestamp, k int")
             .repartition(4),
             sort_by=["ts"],
+        )
+        # the pin is scoped to the write: the session keeps its INT96
+        assert (
+            spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
         )
         m = t._resolve()
         # every file carries a ts footer stat (INT96 would carry none)

@@ -511,3 +511,136 @@ def test_merge_prunes_with_timestamp_key(spark, tmp_path):
     )
     got = {r.ts: r.v for r in t.read().collect()}
     assert got[dt.datetime(2024, 6, 1, 3)] == "JUN3" and len(got) == 20
+
+
+_ACTIONS = ("collect", "take", "count", "first", "head", "toArrow", "toPandas")
+
+
+def _spy_actions(spark, monkeypatch) -> list[str]:
+    """Record, in order, every top-level DataFrame action (an action that
+    calls another — ``take`` → ``collect`` — records once) and every
+    parquet write. Each action re-runs its frame's whole lineage, so the
+    count is what a merge pays over its change set."""
+    events: list[str] = []
+    depth = [0]
+    df_cls = type(spark.range(1))
+    writer_cls = type(spark.range(1).write)
+
+    def spy(cls, name, label):
+        orig = getattr(cls, name)
+
+        def wrapped(*a, **kw):
+            if depth[0] == 0:
+                events.append(label or name)
+            depth[0] += 1
+            try:
+                return orig(*a, **kw)
+            finally:
+                depth[0] -= 1
+
+        monkeypatch.setattr(cls, name, wrapped)
+
+    for name in _ACTIONS:
+        spy(df_cls, name, None)
+    spy(writer_cls, "parquet", "write")
+    return events
+
+
+def test_pruned_cow_merge_runs_one_action_before_the_write(
+    spark, table, monkeypatch
+):
+    """The CoW merge asks the change set for ONE aggregate — row count,
+    upsert count and key range together — then writes: every action
+    re-runs the change set's lineage (a dedup window shuffle in the CDC
+    sink), so each extra one costs a pass."""
+    lo = _df(spark, [(i, f"lo{i}") for i in range(0, 100)]).coalesce(1)
+    hi = _df(spark, [(i, f"hi{i}") for i in range(1000, 1100)]).coalesce(1)
+    table.commit(lo, stats_cols=["k"])
+    table.commit(hi)
+    m1 = table._resolve()
+    changes = spark.createDataFrame(
+        [(5, "LO5", False), (7, None, True), (150, "new", False)],
+        "k long, v string, _del boolean",
+    )
+    events = _spy_actions(spark, monkeypatch)
+    table.merge(changes, key_cols=["k"], delete_col="_del")
+    monkeypatch.undo()
+    assert events == ["collect", "write"], events
+    m = table._resolve()
+    assert m["added_rows"] == 2
+    hi_files = [f for f in m1["files"] if m1["file_stats"][f]["k"][0] >= 1000]
+    assert hi_files and all(f in m["files"] for f in hi_files), (
+        "the file outside the change-set key range must carry over"
+    )
+    got = {r.k: r.v for r in table.read().collect()}
+    assert got[5] == "LO5" and got[150] == "new" and 7 not in got
+    assert len(got) == 200
+
+
+def test_partitioned_merge_runs_one_action_before_the_write(
+    spark, tmp_path, monkeypatch
+):
+    p = SnapshotTable(spark, str(tmp_path / "p"))
+    df = spark.range(0, 40).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id")).alias("v"),
+        (F.col("id") % 4).alias("b"),
+    )
+    p.commit(df.repartition(1), partition_by=["b"])
+    changes = spark.createDataFrame(
+        [(0, "NEW0", 0, False), (41, "NEW41", 1, False), (5, None, 1, True)],
+        "k long, v string, b long, _del boolean",
+    )
+    events = _spy_actions(spark, monkeypatch)
+    p.merge(changes, key_cols=["k"], delete_col="_del")
+    monkeypatch.undo()
+    assert events == ["collect", "write"], events
+    assert p._resolve()["added_rows"] == 2
+    got = {r.k: r.v for r in p.read().collect()}
+    assert got[0] == "NEW0" and got[41] == "NEW41" and 5 not in got
+    assert len(got) == 40
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_merge_added_rows_counts_upserts_and_null_flag_removes(
+    spark, tmp_path, partitioned
+):
+    """``added_rows`` is the count of rows the merge upserts: UPDATEs and
+    INSERTs, not DELETEs, and not a row whose delete flag is NULL. Such
+    a row's key is removed (its key is in the change set, its row is not
+    upserted) — the semantics the merge has always had."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    schema = "k long, v string, b long"
+    base = [(k, f"v{k}", k % 2) for k in range(1, 7)]
+    t.commit(
+        spark.createDataFrame(base, schema).coalesce(1),
+        stats_cols=["k"],
+        partition_by=["b"] if partitioned else None,
+    )
+    changes = spark.createDataFrame(
+        [
+            (2, "U2", 0, False),   # update
+            (3, None, 1, True),    # delete
+            (4, "N4", 0, None),    # NULL flag: removed, not upserted
+            (7, "I7", 1, False),   # insert
+        ],
+        schema + ", _del boolean",
+    )
+    t.merge(changes, key_cols=["k"], delete_col="_del")
+    assert t._resolve()["added_rows"] == 2
+    got = {r.k: r.v for r in t.read().collect()}
+    assert got == {1: "v1", 2: "U2", 5: "v5", 6: "v6", 7: "I7"}
+
+
+def test_recluster_unclustered_table_skips_planning(spark, table, monkeypatch):
+    """With no sort_by/zorder_by, _recluster hands the frame back without
+    asking for its partition count — that question plans (and under AQE
+    runs) the whole rewrite just to throw the number away."""
+    df = _df(spark, [(1, "a")])
+
+    def boom(self):
+        raise AssertionError("unclustered _recluster touched df.rdd")
+
+    monkeypatch.setattr(type(df), "rdd", property(boom))
+    assert table._recluster(df, {}) is df
+    assert table._recluster(df, {"sort_by": [], "zorder_by": []}) is df
