@@ -184,7 +184,7 @@ def main() -> None:
             _materialize(registry.QUERIES[warm_q](spark, warm_dir))
         except Exception as e:  # a warmup failure must not kill the bench
             print(f"# warmup {warm_q} failed: {e}", file=sys.stderr)
-    registry.invalidate_query_cache(spark, warm_dir)
+    registry.invalidate_query_cache(spark)
 
     # Best-of-N per query, cold AND steady (ADVICE r03 / VERDICT r03 #3):
     # - cold: invalidate the prepared-query cache before every rep, so
@@ -204,7 +204,7 @@ def main() -> None:
         fn = registry.QUERIES[name]
         run = lambda: _materialize(fn(spark, sf_dir))  # noqa: E731
         best_cold, rows = _best_of(
-            reps, run, pre=lambda: registry.invalidate_query_cache(spark, sf_dir)
+            reps, run, pre=lambda: registry.invalidate_query_cache(spark)
         )
         best_steady, _ = _best_of(reps, run)  # cache warm from the last cold rep
         cold[name] = round(best_cold, 3)
@@ -327,7 +327,7 @@ def sweep() -> None:
             best, _ = _best_of(
                 reps,
                 lambda: _materialize(fn(spark, sf_dir)),
-                pre=lambda: registry.invalidate_query_cache(spark, sf_dir),
+                pre=lambda: registry.invalidate_query_cache(spark),
             )
             # per-query Spark JOB count (the fixed-floor decomposition the
             # r07 verdict asked for: each job pays ~10-30 ms of scheduler
@@ -335,7 +335,7 @@ def sweep() -> None:
             # per-action cost the single-process oracle never pays)
             group = f"sweep-{sf}-{name}"
             sc.setJobGroup(group, name)
-            registry.invalidate_query_cache(spark, sf_dir)
+            registry.invalidate_query_cache(spark)
             _materialize(fn(spark, sf_dir))
             sc.setJobGroup("", "")
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -350,11 +350,11 @@ def sweep() -> None:
             best, _ = _best_of(
                 reps,
                 lambda: _materialize(fn(spark, sf_dir)),
-                pre=lambda: registry.invalidate_query_cache(spark, sf_dir),
+                pre=lambda: registry.invalidate_query_cache(spark),
             )
             group = f"sweep-{sf}-{name}"
             sc.setJobGroup(group, name)
-            registry.invalidate_query_cache(spark, sf_dir)
+            registry.invalidate_query_cache(spark)
             _materialize(fn(spark, sf_dir))
             sc.setJobGroup("", "")
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))

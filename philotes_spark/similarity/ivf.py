@@ -117,6 +117,15 @@ def assign_cells_arrow(
                 continue
             col = batch.column("v")
             lens = col.value_lengths().to_numpy(zero_copy_only=False)
+            # the reshape below trusts one shared length: a ragged or
+            # null vector whose lengths happen to sum to n*lens[0] would
+            # shift every later row into the wrong cell
+            if col.null_count or (lens != lens[0]).any():
+                raise ValueError(
+                    "assign_cells_arrow needs non-null vectors of one "
+                    f"length; got lengths {sorted(set(lens.tolist()))} "
+                    f"and {col.null_count} null(s) in a batch"
+                )
             M = (
                 col.flatten()
                 .to_numpy(zero_copy_only=False)

@@ -196,16 +196,13 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_INDEX: dict[str, tuple[list[list[float]], DataFrame]] = {}
 
 
-def _drop_index_memos(sf_dir: str | None = None) -> None:
+def _drop_index_memos() -> None:
     """registry.invalidate_query_cache hook: a genuine cold run must
     rebuild the ANN indexes from the parquet inputs (the CacheManager
     clear alone would leave stale un-persisted DataFrames in the memos,
     silently re-running the encode on every subsequent action)."""
     for memo in (_IVF_INDEX, _PQ_INDEX, _IVFPQ_INDEX):
-        if sf_dir is None:
-            memo.clear()
-        else:
-            memo.pop(sf_dir, None)
+        memo.clear()
 
 
 @query("sim_ivf_topk")  # rows-only: centroid index is engine-local

@@ -672,18 +672,12 @@ class SnapshotTable:
         files = new_files if operation == "overwrite" else (
             parent_manifest.get("files", []) + new_files
         )
-        stats = {} if operation == "overwrite" else dict(
-            parent_manifest.get("file_stats", {})
-        )
-        stats = {f: s for f, s in stats.items() if f in set(files)}
         cols = stats_cols or parent_manifest.get("stats_cols") or []
         if not cols and sort_by:
             # clustering without stats can't skip
             cols = sort_field_names(sort_by)
         if zorder_by:
             cols = sorted(set(cols) | set(zorder_by))
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         # a clustered write stages a root that is born clustered under
         # the (inherited) order; appends extend the parent's marks,
         # overwrites reset the table so only the new root can be marked.
@@ -709,8 +703,13 @@ class SnapshotTable:
             and (list(sort_by or []), list(zorder_by or [])) == parent_order
             else []
         )
+        # appends inherit pending MoR deltas (dropping them would
+        # resurrect deleted base rows) and the schema-op journal; an
+        # overwrite's files carry their own physical schema and no
+        # pending deletes, so both reset
+        resets = {} if operation == "append" else {"deltas": [], "schema_ops": []}
         return self._write_manifest(
-            parent=parent,
+            parent_manifest,
             operation=operation,
             files=files,
             added_files=len(new_files),
@@ -722,21 +721,10 @@ class SnapshotTable:
                 else prior_marks
             ),
             properties={**parent_manifest.get("properties", {}), **(properties or {})},
-            file_stats=stats,
             stats_cols=list(cols),
             sort_by=list(sort_by) if sort_by else [],
             zorder_by=list(zorder_by) if zorder_by else [],
-            # appends inherit pending MoR deltas: new rows are untouched by
-            # the delete keys only if truly new; dropping the deltas would
-            # resurrect deleted base rows. Overwrite resets them.
-            deltas=list(parent_manifest.get("deltas", []))
-            if operation == "append"
-            else [],
-            # appends inherit the schema-op journal; an overwrite's files
-            # carry their own physical schema, so the journal resets
-            schema_ops=list(parent_manifest.get("schema_ops", []))
-            if operation == "append"
-            else [],
+            **resets,
         )
 
     def overwrite_partitions(
@@ -818,29 +806,16 @@ class SnapshotTable:
             if (p := _file_partition(f, self.data_dir, pnames)) not in incoming
             and not _cleared(p)
         ]
-        files = kept + new_files
-        stats = {
-            f: s for f, s in m.get("file_stats", {}).items() if f in set(kept)
-        }
-        cols = m.get("stats_cols") or []
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="overwrite-partitions",
-            files=files,
+            files=kept + new_files,
             added_files=len(new_files),
             added_rows=_footer_row_count(new_files),
-            partition_by=list(spec),
             properties={**m.get("properties", {}), **(properties or {})},
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
-    def _spec_meta(self, parent: int, partition_by: list[str],
+    def _spec_meta(self, pm: dict, partition_by: list[str],
                    files) -> dict:
         """Partition-spec bookkeeping (Iceberg spec evolution, B19/A16):
         derive ``partition_specs`` (every layout this table ever
@@ -848,16 +823,15 @@ class SnapshotTable:
         FUTURE writes use) and ``root_specs`` (staged-root → spec id: the
         layout each file was actually written under — files are never
         rewritten by an evolution, exactly Iceberg's rule) from the
-        parent manifest + this commit's layout + its file list. Runs on
-        every commit so any path that changes the layout (an explicit
-        ``evolve_partition_spec`` or an overwrite with a new
-        ``partition_by``) records the evolution, and every other path
-        carries it forward. Reference interop shape:
+        parent manifest ``pm`` (``{}`` for a new table) + this commit's
+        layout + its file list. Runs on every commit so any path that
+        changes the layout (an explicit ``evolve_partition_spec`` or an
+        overwrite with a new ``partition_by``) records the evolution,
+        and every other path carries it forward. Reference interop shape:
         ``TableMetadata.PartitionSpecs[]/DefaultSpecID``
         (internal/iceberg/types.go:136-140)."""
-        pm = self._load(f"v{parent:08d}.json") if parent else {}
         fields = list(partition_by or [])
-        if not parent:
+        if not pm:
             # a brand-new table's FIRST layout is spec 0 — no phantom
             # unpartitioned spec precedes it
             return {
@@ -892,7 +866,7 @@ class SnapshotTable:
             # commit's writer, i.e. under this commit's layout.
             if rel in parent_roots:
                 root_specs[rel] = int(parent_roots[rel])
-            elif parent and any(
+            elif any(
                 f.startswith(root + os.sep) or f == root
                 for f in pm.get("files", [])
             ):
@@ -905,16 +879,69 @@ class SnapshotTable:
             "root_specs": root_specs,
         }
 
-    def _write_manifest(self, *, parent: int, operation: str, files, added_files,
-                        added_rows, partition_by, properties, file_stats,
-                        stats_cols, sort_by: list[str] | None = None,
-                        deltas: list[dict] | None = None,
-                        zorder_by: list[str] | None = None,
-                        schema_ops: list[dict] | None = None,
-                        clustered_roots: list[str] | None = None,
-                        provenance: dict | None = None) -> int:
+    def _write_manifest(self, base: dict, *, operation: str, files,
+                        added_files: int, added_rows: int,
+                        parent: int | None = None, **overrides) -> int:
+        """Commit ``files`` as version ``parent + 1`` — the one place that
+        decides what a commit carries forward. As in Iceberg, a commit is
+        its base's metadata plus this commit's changes.
+
+        ``base`` is the manifest the commit builds on (``{}`` for a new
+        table). ``parent`` defaults to ``base``'s own version: the usual
+        case, where the base IS the parent and is not read again.
+        ``rollback``, ``fast_forward`` and ``create_branch`` build on
+        another manifest and pass ``parent`` themselves.
+
+        The carry-forward rule, field by field:
+
+        - ``partition_by``, ``properties``, ``stats_cols``, ``sort_by``,
+          ``zorder_by``, ``deltas`` (pending MoR deltas) and
+          ``schema_ops`` (the ordered ALTER-COLUMN journal applied at
+          read time) inherit ``base``'s value unless passed. A reset is
+          an explicit ``deltas=[]`` / ``schema_ops=[]``: leaving a
+          keyword out always means "unchanged";
+        - ``file_stats`` defaults to ``base``'s entries for the files
+          still listed, plus footer stats under the commit's
+          ``stats_cols`` for files ``base`` does not list;
+        - ``clustered_roots`` (the partial-progress rewrite's resume
+          marker) inherits from the PARENT version, not from ``base``;
+        - ``provenance`` is never inherited: only
+          :meth:`rewrite_manifests` writes one;
+        - ``partition_specs``/``root_specs``, ``file_meta`` and
+          ``group_stats`` are always derived."""
+        if parent is None:
+            parent, pm = int(base.get("version", 0)), base
+        else:
+            pm = self._load(f"v{parent:08d}.json") if parent else {}
         version = parent + 1
-        pm = self._load(f"v{parent:08d}.json") if parent else {}
+        carried = {
+            "partition_by": list(base.get("partition_by") or []),
+            "properties": dict(base.get("properties") or {}),
+            "file_stats": None,  # derived below unless passed
+            "stats_cols": list(base.get("stats_cols") or []),
+            "sort_by": list(base.get("sort_by") or []),
+            "deltas": list(base.get("deltas") or []),
+            "zorder_by": list(base.get("zorder_by") or []),
+            "schema_ops": list(base.get("schema_ops") or []),
+        }
+        clustered_roots = overrides.pop("clustered_roots", None)
+        provenance = overrides.pop("provenance", None)
+        unknown = sorted(set(overrides) - set(carried))
+        if unknown:
+            raise TypeError(f"unknown manifest fields {unknown}")
+        carried.update(overrides)
+        if carried["file_stats"] is None:
+            live = set(files)
+            carried["file_stats"] = {
+                f: s for f, s in (base.get("file_stats") or {}).items()
+                if f in live
+            }
+            listed = set(base.get("files") or [])
+            born = [f for f in files if f not in listed]
+            if born and carried["stats_cols"]:
+                carried["file_stats"].update(
+                    _footer_stats(born, carried["stats_cols"])
+                )
         # roots KNOWN to be clustered under the current write order —
         # the partial-progress rewrite's resume marker (a resumed
         # rewrite skips them instead of re-clustering everything).
@@ -931,7 +958,7 @@ class SnapshotTable:
         }
         clustered_roots = sorted(set(clustered_roots) & live_roots)
         manifest = {
-            **self._spec_meta(parent, partition_by, files),
+            **self._spec_meta(pm, carried["partition_by"], files),
             "version": version,
             "parent": parent,
             "timestamp_ms": int(time.time() * 1000),
@@ -939,19 +966,7 @@ class SnapshotTable:
             "files": sorted(files),
             "added_files": added_files,
             "added_rows": added_rows,
-            # append: resolved against the parent spec above; overwrite:
-            # whatever this commit wrote (None ⇒ back to unpartitioned)
-            "partition_by": partition_by,
-            "properties": properties,
-            "file_stats": file_stats,
-            "stats_cols": stats_cols,
-            "sort_by": sort_by or [],
-            "deltas": deltas or [],
-            "zorder_by": zorder_by or [],
-            # ordered ALTER-COLUMN journal applied at read time over the
-            # footer-derived schema (add/rename/drop — commit-time
-            # evolution, A12); reset whenever every file is rewritten
-            "schema_ops": schema_ops or [],
+            **carried,
             "clustered_roots": clustered_roots,
         }
         if provenance is not None:
@@ -1004,8 +1019,8 @@ class SnapshotTable:
         manifest["group_stats"] = _group_summaries(
             self.data_dir,
             manifest["files"],
-            file_stats,
-            stats_cols,
+            manifest["file_stats"],
+            manifest["stats_cols"],
             self._root_fields(manifest),
         )
         target = os.path.join(self.snap_dir, f"v{version:08d}.json")
@@ -1081,19 +1096,12 @@ class SnapshotTable:
         for k in unset or []:
             props.pop(k, None)
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="set-properties",
             files=m["files"],
             added_files=0,
             added_rows=0,
-            partition_by=list(m.get("partition_by") or []),
             properties=props,
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     # --- ALTER COLUMN (commit-time schema evolution, A12) ---------------------
@@ -1171,18 +1179,14 @@ class SnapshotTable:
                 for f, s in file_stats.items()
             }
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation=operation,
             files=m["files"],
             added_files=0,
             added_rows=0,
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
+            # a rename re-keys the stats columns, a drop also the stats
             file_stats=file_stats,
             stats_cols=stats_cols,
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
             schema_ops=list(m.get("schema_ops", [])) + [op],
         )
 
@@ -1297,20 +1301,13 @@ class SnapshotTable:
         part_cols = m.get("partition_by") or []
         staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        stats = _footer_stats(new_files, cols) if cols else {}
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="materialize-schema",
             files=new_files,
             added_files=len(new_files),
             added_rows=0,  # logical rows unchanged — a rewrite
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
+            schema_ops=[],
         )
 
     def alter_widen_column(self, name: str, new_type: str) -> int:
@@ -1477,19 +1474,12 @@ class SnapshotTable:
                 "range degenerate — drop the clustering first"
             )
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="evolve-partition-spec",
             files=m["files"],
             added_files=0,
             added_rows=0,
             partition_by=fields,
-            properties=dict(m.get("properties", {})),
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def _spec_fields_by_id(self, m: dict) -> dict[int, list[str]]:
@@ -1683,23 +1673,12 @@ class SnapshotTable:
         # the rewrite; untouched files keep theirs by reference
         staged = self._stage(self._recluster(new_data, m).write)
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        file_stats = {f: s for f, s in stats.items() if f in set(untouched)}
-        if cols:
-            file_stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="merge",
             files=untouched + new_files,
             added_files=len(new_files),
             added_rows=summary.n_up,
-            partition_by=[],
-            properties=dict(m.get("properties", {})),
-            file_stats=file_stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def _merge_mor(
@@ -1734,19 +1713,12 @@ class SnapshotTable:
             "key_cols": list(key_cols),
         }
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="merge-mor",
             files=m["files"],
             added_files=len(up_files),
             added_rows=_footer_row_count(up_files),
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
             deltas=list(m.get("deltas", [])) + [delta],
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def _guard_keys_identify(self, changed: DataFrame, key_cols: list[str]) -> None:
@@ -1889,19 +1861,12 @@ class SnapshotTable:
         ]
         delta = {"type": "pos", "pos_files": pos_files}
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="delete-pos",
             files=m["files"],
             added_files=len(pos_files),
             added_rows=0,
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
             deltas=list(m.get("deltas", [])) + [delta],
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def compact_deltas(self) -> int | None:
@@ -1917,24 +1882,18 @@ class SnapshotTable:
         if not m.get("deltas"):
             return None
         applied = self._recluster(self.read(), m)
-        sort_by = m.get("sort_by") or []
         part_cols = m.get("partition_by") or []
         staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        stats = _footer_stats(new_files, cols) if cols else {}
+        # the applied read folds the deltas and the schema-op journal in
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="compact-deltas",
             files=new_files,
             added_files=len(new_files),
             added_rows=0,  # logical rows unchanged — a rewrite
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=sort_by,
-            zorder_by=list(m.get("zorder_by") or []),
+            deltas=[],
+            schema_ops=[],
         )
 
     def rewrite_late_appends(self) -> int | None:
@@ -2000,26 +1959,12 @@ class SnapshotTable:
             f for f in _staged_parquet_files(staged)
             if _footer_row_count([f]) > 0
         ]
-        cols = m.get("stats_cols") or []
-        file_stats = {
-            f: s for f, s in m.get("file_stats", {}).items() if f not in late
-        }
-        if cols:
-            file_stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="rewrite-late-appends",
             files=[f for f in m["files"] if f not in late] + new_files,
             added_files=len(new_files),
             added_rows=0,  # logical rows unchanged — a rewrite
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=file_stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def _apply_deltas(self, base: DataFrame, m: dict) -> DataFrame:
@@ -2165,20 +2110,14 @@ class SnapshotTable:
         br.data_dir = self.data_dir  # shared immutable data files
         os.makedirs(br.snap_dir, exist_ok=True)
         br._write_manifest(
+            src,
             parent=0,
             operation="branch",
             files=list(src["files"]),
             added_files=0,
             added_rows=0,
-            partition_by=list(src.get("partition_by") or []),
             properties={**src.get("properties", {}),
                         "branch.forked_from": str(src["version"])},
-            file_stats=dict(src.get("file_stats", {})),
-            stats_cols=list(src.get("stats_cols") or []),
-            sort_by=list(src.get("sort_by") or []),
-            zorder_by=list(src.get("zorder_by") or []),
-            deltas=list(src.get("deltas", [])),
-            schema_ops=list(src.get("schema_ops", [])),
         )
         return br
 
@@ -2235,20 +2174,14 @@ class SnapshotTable:
                 "onto current main"
             )
         return self._write_manifest(
+            head,
             parent=self.current_version(),
             operation="fast-forward",
             files=list(head["files"]),
             added_files=0,
             added_rows=0,
-            partition_by=list(head.get("partition_by") or []),
             properties={k: v for k, v in head.get("properties", {}).items()
                         if k != "branch.forked_from"},
-            file_stats=dict(head.get("file_stats", {})),
-            stats_cols=list(head.get("stats_cols") or []),
-            sort_by=list(head.get("sort_by") or []),
-            zorder_by=list(head.get("zorder_by") or []),
-            deltas=list(head.get("deltas", [])),
-            schema_ops=list(head.get("schema_ops", [])),
         )
 
     def cherrypick(self, name: str) -> int:
@@ -2324,25 +2257,18 @@ class SnapshotTable:
                 "already referenced by main — the append was already "
                 "published"
             )
-        stats = dict(m.get("file_stats", {}))
+        # the appended files keep the stats the branch recorded for them
         head_stats = head.get("file_stats", {})
-        stats.update(
-            {f: head_stats[f] for f in added if f in head_stats}
-        )
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="cherry-pick",
             files=m["files"] + added,
             added_files=len(added),
             added_rows=_footer_row_count(added),
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
+            file_stats={
+                **m.get("file_stats", {}),
+                **{f: head_stats[f] for f in added if f in head_stats},
+            },
         )
 
     def rollback(self, to_version: int) -> int:
@@ -2352,19 +2278,12 @@ class SnapshotTable:
         and the bad versions remain time-travelable until expiry."""
         old = self._resolve(version=to_version)
         return self._write_manifest(
+            old,
             parent=self.current_version(),
             operation="rollback",
             files=list(old["files"]),
             added_files=0,
             added_rows=0,
-            partition_by=list(old.get("partition_by") or []),
-            properties=dict(old.get("properties", {})),
-            file_stats=dict(old.get("file_stats", {})),
-            stats_cols=list(old.get("stats_cols") or []),
-            sort_by=list(old.get("sort_by") or []),
-            zorder_by=list(old.get("zorder_by") or []),
-            deltas=list(old.get("deltas", [])),
-            schema_ops=list(old.get("schema_ops", [])),
         )
 
     def read(self, version: int | None = None, as_of_ms: int | None = None,
@@ -3352,25 +3271,12 @@ class SnapshotTable:
             )
         staged = self._stage(_partitioned_writer(new_data, part_cols))
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        file_stats = {
-            f: s for f, s in m.get("file_stats", {}).items() if f in set(untouched)
-        }
-        if cols:
-            file_stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="merge",
             files=untouched + new_files,
             added_files=len(new_files),
             added_rows=sum(r.n_up for r in groups),
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=file_stats,
-            stats_cols=list(cols),
-            sort_by=sort_by,
-            zorder_by=list(m.get("zorder_by") or []),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def compact(self, small_file_bytes: int = 32 * 1024 * 1024) -> int | None:
@@ -3430,24 +3336,12 @@ class SnapshotTable:
             out = src.coalesce(int(n_out))
         staged = self._stage(out.write)
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        stats = {f: s for f, s in m.get("file_stats", {}).items() if f in set(keep)}
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="compact",
             files=keep + new_files,
             added_files=len(new_files),
             added_rows=0,  # no logical rows added — a rewrite, not an append
-            partition_by=[],
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=sort_by,
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     def _compact_migrate_specs(
@@ -3480,20 +3374,14 @@ class SnapshotTable:
         part_cols = m.get("partition_by") or []
         staged = self._stage(_partitioned_writer(applied, part_cols))
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        stats = _footer_stats(new_files, cols) if cols else {}
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="compact",
             files=new_files,
             added_files=len(new_files),
             added_rows=0,  # logical rows unchanged — a rewrite
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
+            deltas=[],
+            schema_ops=[],
             # _recluster re-applied the order to the full rewrite, so
             # the one surviving root is clustered (when there IS one
             # and the applied order is the declared one)
@@ -3549,24 +3437,12 @@ class SnapshotTable:
             out = out.sortWithinPartitions(*sort_exprs(sort_by, out))
         staged = self._stage(out.write.partitionBy(*pnames))
         new_files = _staged_parquet_files(staged)
-        cols = m.get("stats_cols") or []
-        stats = {f: s for f, s in m.get("file_stats", {}).items() if f in set(keep)}
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="compact",
             files=keep + new_files,
             added_files=len(new_files),
             added_rows=0,
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=sort_by,
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     # --- write-order evolution --------------------------------------------------
@@ -3663,9 +3539,8 @@ class SnapshotTable:
                 "ordering by them is degenerate — drop them from the "
                 "write order or evolve the partition spec first"
             )
-        stats_cols = sorted(set(m.get("stats_cols") or []) | set(want))
         return self._write_manifest(
-            parent=parent,
+            m,
             # the order CHANGED (no-op returned above): no existing root
             # is clustered under the NEW order — reset the rewrite
             # progress marker
@@ -3674,14 +3549,9 @@ class SnapshotTable:
             files=m["files"],
             added_files=0,
             added_rows=0,
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=stats_cols,
+            stats_cols=sorted(set(m.get("stats_cols") or []) | set(want)),
             sort_by=sort_by,
             zorder_by=zorder_by,
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
         )
 
     @staticmethod
@@ -3986,26 +3856,12 @@ class SnapshotTable:
         staged = self._stage(_partitioned_writer(out, part_cols))
         new_files = _staged_parquet_files(staged)
         keep = [f for f in m["files"] if f not in set(group)]
-        cols = m.get("stats_cols") or []
-        stats = {
-            f: s
-            for f, s in m.get("file_stats", {}).items()
-            if f in set(keep)
-        }
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=m["version"],
+            m,
             operation="rewrite-group",
             files=keep + new_files,
             added_files=len(new_files),
             added_rows=0,  # row-identical swap
-            partition_by=list(part_cols),
-            properties=dict(m.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
             clustered_roots=(m.get("clustered_roots") or [])
             + (
                 [os.path.relpath(staged, self.data_dir)]
@@ -4182,19 +4038,11 @@ class SnapshotTable:
             },
         }
         return self._write_manifest(
-            parent=parent,
+            m,
             operation="rewrite-manifests",
             files=m["files"],
             added_files=0,
             added_rows=0,
-            partition_by=list(m.get("partition_by") or []),
-            properties=dict(m.get("properties", {})),
-            file_stats=dict(m.get("file_stats", {})),
-            stats_cols=list(m.get("stats_cols") or []),
-            sort_by=list(m.get("sort_by") or []),
-            zorder_by=list(m.get("zorder_by") or []),
-            deltas=list(m.get("deltas", [])),
-            schema_ops=list(m.get("schema_ops", [])),
             provenance=prov,
         )
 
@@ -4266,26 +4114,12 @@ class SnapshotTable:
             except OSError:
                 _shutil.copy2(src, dst)  # cross-device fallback
             new_files.append(dst)
-        files = list(pm.get("files", [])) + new_files
-        stats = dict(pm.get("file_stats", {}))
-        cols = pm.get("stats_cols") or []
-        if cols:
-            stats.update(_footer_stats(new_files, cols))
         return self._write_manifest(
-            parent=parent,
+            pm,
             operation="add-files",
-            files=files,
+            files=list(pm.get("files", [])) + new_files,
             added_files=len(new_files),
             added_rows=_footer_row_count(new_files),
-            partition_by=[],
-            clustered_roots=list(pm.get("clustered_roots") or []),
-            properties=dict(pm.get("properties", {})),
-            file_stats=stats,
-            stats_cols=list(cols),
-            sort_by=list(pm.get("sort_by") or []),
-            zorder_by=list(pm.get("zorder_by") or []),
-            deltas=list(pm.get("deltas", [])),
-            schema_ops=list(pm.get("schema_ops", [])),
         )
 
     def expire_snapshots(

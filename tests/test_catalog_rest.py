@@ -1833,20 +1833,13 @@ def test_publish_late_append_pos_deleted_rows_not_divergent(
         if f.endswith(".parquet")
     ]
     tbl._write_manifest(
-        parent=m["version"],
+        m,
         operation="delete-pos",
         files=m["files"],
         added_files=len(pos_files),
         added_rows=0,
-        partition_by=[],
-        properties=dict(m.get("properties", {})),
-        file_stats=dict(m.get("file_stats", {})),
-        stats_cols=list(m.get("stats_cols") or []),
-        sort_by=[],
-        zorder_by=[],
         deltas=list(m.get("deltas", []))
         + [{"type": "pos", "pos_files": pos_files}],
-        schema_ops=list(m.get("schema_ops", [])),
     )
     assert tbl.read().count() == 10  # {0..9}-{3}+{50}
     cat = RestCatalog(f"http://127.0.0.1:{mock_catalog.port}", "wh")

@@ -252,6 +252,29 @@ def test_arrow_ivf_assign_row_identical_to_expr(emb):
     assert arrow == expr
 
 
+@pytest.mark.parametrize(
+    "vecs",
+    [
+        # lengths 3+2+4 = 3*3: a reshape by the first length "fits"
+        [[1.0, 0.0, 0.0], [0.0, 1.0], [0.0, 0.0, 1.0, 1.0]],
+        [[1.0, 0.0, 0.0], None, [0.0, 0.0, 1.0]],
+    ],
+    ids=["ragged", "null"],
+)
+def test_arrow_ivf_assign_refuses_ragged_or_null_vectors(spark, vecs):
+    """One Arrow batch holding vectors of different lengths (or a null
+    vector) must fail loudly instead of being reshaped into the wrong
+    rows and assigned to the wrong cells."""
+    from philotes_spark.similarity.ivf import assign_cells_arrow
+
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+    with pytest.raises(Exception, match="non-null vectors of one length"):
+        assign_cells_arrow(emb, cents).collect()
+
+
 def test_arrow_cosine_topk_row_identical_to_jvm(emb):
     """The Arrow-batched numpy scorer (r11 — serves the registered
     sim_cosine_topk) is row-identical to the JVM lambda-fold reference

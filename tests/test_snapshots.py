@@ -2,6 +2,8 @@
 (B5/B6/A7/A17 parity, sample-queries.sql:47-61 surface).
 """
 
+import os
+
 import pytest
 
 from philotes_spark.sources.snapshots import CommitConflict, SnapshotTable
@@ -1111,3 +1113,141 @@ def test_remove_orphan_files_older_than_guard(spark, tmp_path):
     # no cutoff: single-writer behavior, everything unreferenced goes
     assert t.remove_orphan_files() == 1
     assert not _os.path.exists(fresh)
+
+
+# --- the manifest carry-forward contract -------------------------------------
+
+_CARRIED = (
+    "partition_by", "properties", "file_stats", "stats_cols",
+    "sort_by", "zorder_by", "deltas", "schema_ops",
+)
+
+
+def _carried(m: dict) -> dict:
+    return {k: m.get(k) for k in _CARRIED}
+
+
+def _contract_table(spark, path) -> SnapshotTable:
+    t = SnapshotTable(spark, path)
+    t.commit(
+        spark.createDataFrame(
+            [(i, i % 3, f"s{i}", i) for i in range(12)],
+            "k long, g long, x string, n int",
+        ).coalesce(2),
+        stats_cols=["k"],
+        sort_by=["k"],
+        properties={"owner": "etl"},
+    )
+    return t
+
+
+def test_metadata_commits_carry_every_field_they_do_not_own(spark, tmp_path):
+    """Every metadata-only commit carries each manifest field from the
+    manifest it builds on — the parent, or for rollback/branch/
+    fast-forward the manifest it adopts — except the fields that
+    operation owns."""
+    t = _contract_table(spark, str(tmp_path / "t"))
+    ops = [
+        ("set_properties", lambda: t.set_properties({"a": "1"}), {"properties"}),
+        ("alter_add", lambda: t.alter_add_columns([("c2", "string")]),
+         {"schema_ops"}),
+        ("alter_rename", lambda: t.alter_rename_column("x", "x2"),
+         {"schema_ops"}),
+        ("alter_widen", lambda: t.alter_widen_column("n", "bigint"),
+         {"schema_ops"}),
+        ("alter_drop", lambda: t.alter_drop_column("c2"), {"schema_ops"}),
+        ("evolve_partition_spec", lambda: t.evolve_partition_spec(["g"]),
+         {"partition_by"}),
+        ("set_write_order", lambda: t.set_write_order(sort_by=["n"]),
+         {"sort_by", "stats_cols"}),
+        ("delete_where_positional",
+         lambda: t.delete_where_positional("k = 1"), {"deltas"}),
+        ("rewrite_manifests", lambda: t.rewrite_manifests(), set()),
+    ]
+    for name, run, owned in ops:
+        parent = t._resolve()
+        run()
+        m = t._resolve()
+        assert m["version"] == parent["version"] + 1, name
+        for k in _CARRIED:
+            if k not in owned:
+                assert m.get(k) == parent.get(k), (name, k)
+        for k in owned:
+            assert m.get(k) != parent.get(k), (name, k)
+    assert "provenance" in t._resolve()
+
+    # rollback adopts the target version's fields, not the parent's
+    target = t._resolve(version=t.current_version() - 2)
+    t.rollback(to_version=target["version"])
+    assert _carried(t._resolve()) == _carried(target)
+
+    # a branch adopts its fork point's fields plus its fork marker
+    src = t._resolve()
+    br = t.create_branch("audit")
+    head = br._resolve()
+    assert head["properties"] == {
+        **src["properties"], "branch.forked_from": str(src["version"])
+    }
+    assert {**_carried(head), "properties": None} == {
+        **_carried(src), "properties": None
+    }
+
+    # fast-forward adopts the branch head's fields minus the marker
+    t.fast_forward("audit")
+    assert _carried(t._resolve()) == {
+        **_carried(head), "properties": src["properties"]
+    }
+
+    # provenance is never inherited past rewrite_manifests' own commit
+    names = sorted(f for f in os.listdir(t.snap_dir) if f.startswith("v"))
+    with_prov = [n for n in names if "provenance" in t._load(n)]
+    assert with_prov == [
+        n for n in names if t._load(n)["operation"] == "rewrite-manifests"
+    ]
+    assert len(with_prov) == 1
+
+
+def test_rollback_takes_clustered_roots_from_the_parent(spark, tmp_path):
+    """``clustered_roots`` is the resume marker for the CURRENT write
+    order, so a rollback keeps the parent's marks (here: none, since
+    set_write_order reset them) rather than the target version's."""
+    t = _contract_table(spark, str(tmp_path / "t"))
+    assert t._resolve()["clustered_roots"]  # the clustered commit marks its root
+    t.set_write_order(sort_by=["n"])
+    assert t._resolve()["clustered_roots"] == []
+    t.rollback(to_version=1)
+    m = t._resolve()
+    assert m["sort_by"] == ["k"]  # the target's order...
+    assert m["clustered_roots"] == []  # ...but the parent's marks
+
+
+def test_full_rewrites_reset_deltas_and_schema_ops(spark, tmp_path):
+    """The rewrites that materialize the applied read fold the pending
+    deltas and the schema-op journal into the data, so both reset."""
+    for name, run in (
+        ("compact_deltas", lambda t: t.compact_deltas()),
+        ("rewrite_clustered", lambda t: t.rewrite_clustered()),
+    ):
+        t = _contract_table(spark, str(tmp_path / name))
+        t.alter_add_columns([("c2", "string")])
+        t.merge(
+            spark.createDataFrame(
+                [(2, 0, "u", 5, "z", False)],
+                "k long, g long, x string, n int, c2 string, _del boolean",
+            ),
+            key_cols=["k"], delete_col="_del", mode="mor",
+        )
+        before = t._resolve()
+        assert before["deltas"] and before["schema_ops"], name
+        run(t)
+        m = t._resolve()
+        assert (m["deltas"], m["schema_ops"]) == ([], []), name
+        assert m["properties"] == before["properties"], name
+        assert m["stats_cols"] == before["stats_cols"], name
+    # materialize_schema refuses pending deltas: a journal-only table
+    t = _contract_table(spark, str(tmp_path / "materialize"))
+    t.alter_add_columns([("c2", "string")])
+    t.materialize_schema()
+    m = t._resolve()
+    assert (m["deltas"], m["schema_ops"]) == ([], [])
+    assert m["sort_by"] == ["k"] and m["properties"] == {"owner": "etl"}

@@ -50,14 +50,14 @@ def main() -> None:
             len(registry.QUERIES[q](spark, warm_dir).toPandas())
         except Exception as e:
             print(f"# warm {q} failed: {e}", file=sys.stderr)
-    registry.invalidate_query_cache(spark, warm_dir)
+    registry.invalidate_query_cache(spark)
 
     out: dict[str, dict] = {}
     for name in bench.HEADLINE:
         fn = registry.QUERIES[name]
         best = {"build": float("inf"), "exec": float("inf"), "jobs": 0, "rows": 0}
         for rep in range(reps):
-            registry.invalidate_query_cache(spark, sf_dir)
+            registry.invalidate_query_cache(spark)
             group = f"fs-{name}-{rep}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
