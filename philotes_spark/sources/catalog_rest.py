@@ -910,7 +910,7 @@ class RestCatalog:
             late_rows = snap._apply_schema_ops(
                 snap._read_file_list(
                     late,
-                    list(manifest.get("partition_by") or []),
+                    manifest,
                     with_pos=has_pos,
                     widen=any(
                         op.get("op") == "widen"

@@ -323,45 +323,80 @@ def _footer_map(files: list[str], fn):
         return list(pool.map(fn, files))
 
 
-def _footer_row_count(files: list[str]) -> int:
-    """Total rows across parquet files, from footer metadata only. Used
-    for a commit's ``added_rows``: the staged files ARE the committed
-    rows, so re-running ``df.count()`` (a second full execution of the
-    input plan — at 100 TB, a second scan/shuffle of everything just
-    written) is pure waste; the writer already recorded the count in
-    every footer."""
+def _footer_rows(files: list[str]) -> dict[str, int]:
+    """Row count of each parquet file, from its footer alone — for the
+    delta and empty-part checks of files a manifest does not list. The
+    writer recorded every count, so no ``df.count()`` re-runs the plan
+    that wrote them."""
     import pyarrow.parquet as pq
 
-    return sum(
-        _footer_map(files, lambda f: pq.ParquetFile(f).metadata.num_rows)
+    return dict(
+        zip(files, _footer_map(files, lambda f: pq.ParquetFile(f).metadata.num_rows))
     )
 
 
-def _footer_stats(files: list[str], cols: list[str]) -> dict:
-    """Per-file [min, max] for ``cols``, read from the parquet footers —
-    no data scan; the same statistics an Iceberg manifest carries."""
+# the footer key Spark stores each written file's schema under (JSON),
+# and the key its schema inference reads (readSchemaFromFooter)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_facts(f: str, cols: list[str]) -> dict | None:
+    """Everything a commit records about one new data file, from ONE
+    footer read: size, row count, per-column [min, max] for ``cols`` (the
+    statistics an Iceberg manifest entry carries; no data scan) and the
+    Spark schema the writer stored in the footer (None for a file written
+    by another engine). None when the file is gone."""
     import pyarrow.parquet as pq
 
-    def one(f: str) -> dict:
+    try:
+        size = os.path.getsize(f)
         md = pq.ParquetFile(f).metadata
-        per: dict[str, list] = {}
-        for rg_i in range(md.num_row_groups):
-            rg = md.row_group(rg_i)
-            for ci in range(rg.num_columns):
-                c = rg.column(ci)
-                if c.path_in_schema not in cols:
-                    continue
-                st = c.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = _json_safe(st.min), _json_safe(st.max)
-                prev = per.get(c.path_in_schema)
-                per[c.path_in_schema] = (
-                    [mn, mx] if prev is None else [min(prev[0], mn), max(prev[1], mx)]
-                )
-        return per
+    except OSError:
+        return None
+    per: dict[str, list] = {}
+    for rg_i in range(md.num_row_groups if cols else 0):
+        rg = md.row_group(rg_i)
+        for ci in range(rg.num_columns):
+            c = rg.column(ci)
+            if c.path_in_schema not in cols:
+                continue
+            st = c.statistics
+            if st is None or not st.has_min_max:
+                continue
+            mn, mx = _json_safe(st.min), _json_safe(st.max)
+            prev = per.get(c.path_in_schema)
+            per[c.path_in_schema] = (
+                [mn, mx] if prev is None else [min(prev[0], mn), max(prev[1], mx)]
+            )
+    try:
+        schema = json.loads((md.metadata or {}).get(_SPARK_SCHEMA_KEY) or "null")
+    except ValueError:
+        schema = None  # not JSON (a pre-1.4 Spark writer): Spark infers
+    if not (isinstance(schema, dict) and schema.get("type") == "struct"):
+        schema = None
+    return {"size": size, "rows": md.num_rows, "stats": per, "schema": schema}
 
-    return dict(zip(files, _footer_map(files, one)))
+
+def _merge_schemas(left: dict, right: dict) -> dict | None:
+    """``StructType.merge`` — the fold Spark's ``mergeSchema`` inference
+    applies to file schemas — over two recorded schema JSONs, for the
+    case that needs no type merging: fields keep their first appearance
+    (order, spelling, metadata), ``right``'s new fields append, and a
+    field's nullability is the OR of both. A field whose type differs
+    (nested additions, widths), or whose spelling differs only in case,
+    returns None: Spark's own inference then decides, as it always did."""
+    fields = [dict(f) for f in left["fields"]]
+    by_name = {f["name"].lower(): f for f in fields}
+    for f in right["fields"]:
+        have = by_name.get(f["name"].lower())
+        if have is None:
+            fields.append(dict(f))
+            by_name[f["name"].lower()] = fields[-1]
+        elif have["name"] != f["name"] or have["type"] != f["type"]:
+            return None
+        else:
+            have["nullable"] = have["nullable"] or f["nullable"]
+    return {"type": "struct", "fields": fields}
 
 
 def _group_summaries(
@@ -572,7 +607,8 @@ class SnapshotTable:
         the session's confs are left exactly as found."""
         staged = os.path.join(self.data_dir, uuid.uuid4().hex)
         conf = self.spark.conf
-        prev = conf.getAll.get(_TS_TYPE_CONF)
+        # one key, one round trip (getAll fetches every conf); None ⇔ unset
+        prev = conf.get(_TS_TYPE_CONF, None)
         try:
             conf.set(_TS_TYPE_CONF, "TIMESTAMP_MICROS")
             pinned = True
@@ -713,7 +749,6 @@ class SnapshotTable:
             operation=operation,
             files=files,
             added_files=len(new_files),
-            added_rows=_footer_row_count(new_files),
             partition_by=list(partition_by) if partition_by else [],
             clustered_roots=(
                 prior_marks + [os.path.relpath(staged, self.data_dir)]
@@ -811,7 +846,6 @@ class SnapshotTable:
             operation="overwrite-partitions",
             files=kept + new_files,
             added_files=len(new_files),
-            added_rows=_footer_row_count(new_files),
             properties={**m.get("properties", {}), **(properties or {})},
         )
 
@@ -880,7 +914,7 @@ class SnapshotTable:
         }
 
     def _write_manifest(self, base: dict, *, operation: str, files,
-                        added_files: int, added_rows: int,
+                        added_files: int, added_rows: int | None = None,
                         parent: int | None = None, **overrides) -> int:
         """Commit ``files`` as version ``parent + 1`` — the one place that
         decides what a commit carries forward. As in Iceberg, a commit is
@@ -890,7 +924,12 @@ class SnapshotTable:
         table). ``parent`` defaults to ``base``'s own version: the usual
         case, where the base IS the parent and is not read again.
         ``rollback``, ``fast_forward`` and ``create_branch`` build on
-        another manifest and pass ``parent`` themselves.
+        another manifest and pass ``parent`` themselves. ``added_rows``
+        defaults to the rows of the files ``base`` does not list — the
+        files an append-shaped commit adds.
+
+        Each file new to this commit has its footer read exactly once,
+        for its size, rows, stats and schema together.
 
         The carry-forward rule, field by field:
 
@@ -907,8 +946,8 @@ class SnapshotTable:
           marker) inherits from the PARENT version, not from ``base``;
         - ``provenance`` is never inherited: only
           :meth:`rewrite_manifests` writes one;
-        - ``partition_specs``/``root_specs``, ``file_meta`` and
-          ``group_stats`` are always derived."""
+        - ``partition_specs``/``root_specs``, ``file_meta``,
+          ``root_schemas`` and ``group_stats`` are always derived."""
         if parent is None:
             parent, pm = int(base.get("version", 0)), base
         else:
@@ -930,17 +969,27 @@ class SnapshotTable:
         if unknown:
             raise TypeError(f"unknown manifest fields {unknown}")
         carried.update(overrides)
+        # the one footer read per file this commit adds: files the parent
+        # has no file_meta for, and files base does not list
+        parent_meta = pm.get("file_meta") or {}
+        listed = set(base.get("files") or [])
+        born = [f for f in files if f not in listed]
+        fresh = sorted({f for f in files if f not in parent_meta} | set(born))
+        cols = carried["stats_cols"]
+        facts = dict(
+            zip(fresh, _footer_map(fresh, lambda f: _footer_facts(f, cols)))
+        )
+        if added_rows is None:
+            added_rows = sum(facts[f]["rows"] for f in born if facts[f])
         if carried["file_stats"] is None:
             live = set(files)
             carried["file_stats"] = {
                 f: s for f, s in (base.get("file_stats") or {}).items()
                 if f in live
             }
-            listed = set(base.get("files") or [])
-            born = [f for f in files if f not in listed]
-            if born and carried["stats_cols"]:
+            if cols:
                 carried["file_stats"].update(
-                    _footer_stats(born, carried["stats_cols"])
+                    {f: facts[f]["stats"] for f in born if facts[f]}
                 )
         # roots KNOWN to be clustered under the current write order —
         # the partial-progress rewrite's resume marker (a resumed
@@ -987,31 +1036,31 @@ class SnapshotTable:
         # a maintenance planner doing millions of them per invocation is
         # a driver-side metadata storm. Pre-feature manifests (time
         # travel) fall back to os.path.getsize at the consumer.
-        parent_meta = pm.get("file_meta") or {}
         file_meta = {}
-        new_files = []
         for f in manifest["files"]:
-            known = parent_meta.get(f)
-            if known is not None:
-                file_meta[f] = known
-            else:
-                new_files.append(f)
-        if new_files:
-            import pyarrow.parquet as pq
-
-            def _meta_of(f: str):
-                try:
-                    return [
-                        os.path.getsize(f),
-                        pq.ParquetFile(f).metadata.num_rows,
-                    ]
-                except OSError:
-                    return None
-
-            for f, fm in zip(new_files, _footer_map(new_files, _meta_of)):
-                if fm is not None:
-                    file_meta[f] = fm
+            if f in parent_meta:
+                file_meta[f] = parent_meta[f]
+            elif facts[f] is not None:
+                file_meta[f] = [facts[f]["size"], facts[f]["rows"]]
         manifest["file_meta"] = file_meta
+        # staged root → the Spark schema its files were written with, so
+        # a read passes the schema instead of running an inference job
+        # over the footers (Iceberg keeps the schema in table metadata
+        # too). Live roots inherit the parent's entry; a root whose files
+        # are all new takes the schema its footers carry when they agree.
+        # Roots without an entry (manifests from before this field,
+        # foreign files from add_files) read by inference.
+        parent_schemas = pm.get("root_schemas") or {}
+        root_schemas = {}
+        for root, fs in _group_files_by_root(self.data_dir, files).items():
+            rel = os.path.relpath(root, self.data_dir)
+            if rel in parent_schemas:
+                root_schemas[rel] = parent_schemas[rel]
+            elif all(facts.get(f) for f in fs):
+                found = [facts[f]["schema"] for f in fs]
+                if found[0] and all(x == found[0] for x in found):
+                    root_schemas[rel] = found[0]
+        manifest["root_schemas"] = root_schemas
         # per-root summaries for two-level scan planning (the Iceberg
         # manifest-list field-summary analogue): O(files) once at commit
         # — the same order as the file list itself — so every read plans
@@ -1647,14 +1696,15 @@ class SnapshotTable:
 
         kept = None
         if affected:
-            # mergeSchema + schema ops: affected files may straddle an
-            # ALTER COLUMN, and the rewrite must land the APPLIED schema
-            # so it unions with the (read()-shaped) change set (per-root
-            # unions when a widen op left mixed physical widths)
+            # the union schema of the affected roots + schema ops:
+            # affected files may straddle an ALTER COLUMN, and the
+            # rewrite must land the APPLIED schema so it unions with the
+            # (read()-shaped) change set (per-root unions when a widen
+            # op left mixed physical widths)
             current = self._apply_schema_ops(
                 self._read_file_list(
                     affected,
-                    [],
+                    m,
                     widen=_has_widen(m),
                     # old-spec roots surface their path-derived partition
                     # columns (spec evolution): without the map the rewrite
@@ -1690,25 +1740,29 @@ class SnapshotTable:
     ) -> int:
         """Write the change set as an equality-delete + upsert delta (see
         :meth:`merge` mode='mor'). O(changes) I/O — no base file is read
-        or rewritten."""
-        if not changes.take(1):
-            return m["version"]
+        or rewritten. The two writes are its only Spark actions: the
+        footers of the staged key files say whether the change set was
+        empty."""
+        import shutil
+
         upserts = changes
         if delete_col is not None:
             upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
         key_staged = self._stage(changes.select(*key_cols).distinct().write)
         up_staged = self._stage(upserts.write)
+        key_rows = _footer_rows(_staged_parquet_files(key_staged))
+        up_rows = _footer_rows(_staged_parquet_files(up_staged))
+        if not any(key_rows.values()):
+            # every change row has a key, so no keys ⇔ an empty change
+            # set: a no-op that leaves no staged root behind
+            shutil.rmtree(key_staged)
+            shutil.rmtree(up_staged)
+            return m["version"]
         # drop empty part files: each staged file becomes a delete- or
-        # data-manifest entry and a per-read scan task (footer check only)
-        up_files = [
-            f for f in _staged_parquet_files(up_staged)
-            if _footer_row_count([f]) > 0
-        ]
+        # data-manifest entry and a per-read scan task
+        up_files = [f for f, n in up_rows.items() if n]
         delta = {
-            "key_files": [
-                f for f in _staged_parquet_files(key_staged)
-                if _footer_row_count([f]) > 0
-            ],
+            "key_files": [f for f, n in key_rows.items() if n],
             "upsert_files": up_files,
             "key_cols": list(key_cols),
         }
@@ -1717,7 +1771,7 @@ class SnapshotTable:
             operation="merge-mor",
             files=m["files"],
             added_files=len(up_files),
-            added_rows=_footer_row_count(up_files),
+            added_rows=sum(up_rows.values()),
             deltas=list(m.get("deltas", [])) + [delta],
         )
 
@@ -1837,7 +1891,7 @@ class SnapshotTable:
             self._apply_schema_ops(
                 self._read_file_list(
                     m["files"],
-                    m.get("partition_by") or [],
+                    m,
                     with_pos=True,
                     spec_map=self._root_fields(m),
                 ),
@@ -1856,8 +1910,7 @@ class SnapshotTable:
         # each become a delete-manifest entry — drop them (footer check,
         # no data scan); non-empty by the take(1) guard above
         pos_files = [
-            f for f in _staged_parquet_files(staged)
-            if _footer_row_count([f]) > 0
+            f for f, n in _footer_rows(_staged_parquet_files(staged)).items() if n
         ]
         delta = {"type": "pos", "pos_files": pos_files}
         return self._write_manifest(
@@ -1932,7 +1985,7 @@ class SnapshotTable:
         base = self._apply_schema_ops(
             self._read_file_list(
                 sorted(late),
-                m.get("partition_by") or [],
+                m,
                 with_pos=has_pos,
                 widen=_has_widen(m),
                 spec_map=self._root_fields(m),
@@ -1956,8 +2009,7 @@ class SnapshotTable:
             _partitioned_writer(self._recluster(base, m), part_cols)
         )
         new_files = [
-            f for f in _staged_parquet_files(staged)
-            if _footer_row_count([f]) > 0
+            f for f, n in _footer_rows(_staged_parquet_files(staged)).items() if n
         ]
         return self._write_manifest(
             m,
@@ -2250,7 +2302,8 @@ class SnapshotTable:
         added = [f for f in head["files"] if f not in base_files]
         if not added:
             return self.current_version()  # nothing staged: no-op
-        dup = [f for f in added if f in set(m["files"])]
+        live = set(m["files"])
+        dup = [f for f in added if f in live]
         if dup:
             raise ValueError(
                 f"cherrypick('{name}'): {len(dup)} staged file(s) are "
@@ -2264,7 +2317,6 @@ class SnapshotTable:
             operation="cherry-pick",
             files=m["files"] + added,
             added_files=len(added),
-            added_rows=_footer_row_count(added),
             file_stats={
                 **m.get("file_stats", {}),
                 **{f: head_stats[f] for f in added if f in head_stats},
@@ -2297,12 +2349,13 @@ class SnapshotTable:
         m = self._resolve(version, as_of_ms)
         if not m["files"]:
             raise ValueError(f"snapshot {m['version']} is empty")
-        # mergeSchema: an appended file may carry columns the earlier files
-        # lack (additive evolution, A12). Without it Spark infers the
-        # snapshot schema from ONE sampled footer, so an evolved column
-        # NONDETERMINISTICALLY vanishes depending on which file is sampled
-        # (observed r06). Merging unions all file schemas — the same
-        # read-side semantics Iceberg gets from its schema list.
+        # the read schema is the union of every live root's schema: an
+        # appended root may carry columns the earlier ones lack (additive
+        # evolution, A12). A schema from ONE file would make an evolved
+        # column vanish depending on the file sampled (observed r06).
+        # The manifest records each root's schema (root_schemas), so the
+        # union costs no Spark job; roots without a record are inferred
+        # (see _parquet) — Iceberg's schema-in-metadata read either way.
         has_pos = any(d.get("type") == "pos" for d in m.get("deltas", []))
         # schema ops apply BEFORE deltas: ALTER refuses pending deltas, so
         # every live delta was written post-ALTER under the applied schema
@@ -2310,7 +2363,7 @@ class SnapshotTable:
             self._apply_schema_ops(
                 self._read_file_list(
                     m["files"],
-                    m.get("partition_by") or [],
+                    m,
                     with_pos=has_pos,
                     widen=_has_widen(m),
                     spec_map=self._root_fields(m),
@@ -2321,17 +2374,54 @@ class SnapshotTable:
         )
         return out.drop("_pos_file", "_pos_index") if has_pos else out
 
+    def _parquet(
+        self, m: dict, files: list[str], base_path: str | None = None
+    ) -> DataFrame:
+        """Scan ``files`` with the schema manifest ``m`` records for their
+        staged roots (``root_schemas``), folded with the merge Spark's
+        ``mergeSchema`` inference applies (:func:`_merge_schemas`) in the
+        order it applies it: by file path. The recorded schema is the one
+        Spark's writer put in each footer, which is what inference reads,
+        so the DataFrame is the same; it just costs no inference job.
+        Without a record for every root (manifests from before the field,
+        foreign files from ``add_files``), or when the fold needs type
+        merging, Spark infers as before. ``base_path`` turns a hive root's
+        key=value segments into partition columns, typed from the paths
+        either way."""
+        recorded = m.get("root_schemas") or {}
+        roots = {os.path.relpath(f, self.data_dir).split(os.sep)[0] for f in files}
+        schema = None
+        # a root's files sort together, under "<root>/"
+        for root in sorted(roots, key=lambda r: r + os.sep):
+            s = recorded.get(root)
+            # None ends the fold: a root without a record, or a type merge
+            schema = s if schema is None else s and _merge_schemas(schema, s)
+            if schema is None:
+                break
+        rd = self.spark.read
+        if schema is not None:
+            from pyspark.sql.types import StructType
+
+            rd = rd.schema(StructType.fromJson(schema))
+        else:
+            rd = rd.option("mergeSchema", "true")
+        if base_path:
+            rd = rd.option("basePath", base_path)
+        return rd.parquet(*files)
+
     def _read_file_list(
         self,
         files: list[str],
-        partition_by: list[str],
+        m: dict,
         with_pos: bool = False,
         widen: bool = False,
         spec_map: dict[str, list[str]] | None = None,
     ) -> DataFrame:
-        """Read an explicit data-file list under the snapshot's layout
-        (shared by :meth:`read` and :meth:`read_incremental`).
-        ``with_pos`` attaches each row's physical address —
+        """Read an explicit data-file list of manifest ``m`` under the
+        snapshot's layout, every scan through :meth:`_parquet` (the
+        recorded schema, else inference). ``spec_map`` (staged root →
+        partition fields) defaults to ``m``'s default spec for every
+        root. ``with_pos`` attaches each row's physical address —
         ``_pos_file``/``_pos_index`` from Spark's ``_metadata`` scan
         columns — which positional deletes key on; metadata columns only
         resolve against a file scan, so they attach per scan BEFORE any
@@ -2355,10 +2445,10 @@ class SnapshotTable:
                 F.col("_metadata.row_index").alias("_pos_index"),
             )
 
-        if spec_map is None and partition_by:
+        if spec_map is None and m.get("partition_by"):
             # pre-spec-evolution callers: one layout for every root
             spec_map = {
-                root: list(partition_by)
+                root: list(m["partition_by"])
                 for root in _group_files_by_root(self.data_dir, files)
             }
         if spec_map and any(spec_map.values()):
@@ -2372,10 +2462,7 @@ class SnapshotTable:
                 _group_files_by_root(self.data_dir, files).items()
             ):
                 fields = spec_map.get(root) or []
-                rd = self.spark.read.option("mergeSchema", "true")
-                if fields:
-                    rd = rd.option("basePath", root)
-                p = pos(rd.parquet(*fs))
+                p = pos(self._parquet(m, fs, base_path=root if fields else None))
                 # transform-result path columns (ts_day/id_bucket) are
                 # layout, not table columns — the SOURCE column is in the
                 # data files; drop them before the union
@@ -2414,7 +2501,7 @@ class SnapshotTable:
             return out
         if widen:
             parts = [
-                pos(self.spark.read.option("mergeSchema", "true").parquet(*fs))
+                pos(self._parquet(m, fs))
                 for _root, fs in sorted(
                     _group_files_by_root(self.data_dir, files).items()
                 )
@@ -2423,7 +2510,7 @@ class SnapshotTable:
             for p in parts[1:]:
                 out = out.unionByName(p, allowMissingColumns=True)
             return out
-        return pos(self.spark.read.option("mergeSchema", "true").parquet(*files))
+        return pos(self._parquet(m, files))
 
     def read_incremental(
         self, from_version: int, to_version: int | None = None
@@ -2505,7 +2592,7 @@ class SnapshotTable:
             parts.append(
                 self._read_file_list(
                     new_files,
-                    m.get("partition_by") or [],
+                    m,
                     spec_map=self._root_fields(m),
                 ).withColumn("commit_version", F.lit(v).cast("int"))
             )
@@ -2629,12 +2716,14 @@ class SnapshotTable:
         has_pos = any(d.get("type") == "pos" for d in m.get("deltas", []))
 
         def scan(fs: list[str]) -> DataFrame:
-            # shared reader: mergeSchema for additive evolution, per-root
-            # unions for widen-mixed widths, _metadata address columns
-            # for positional deltas
+            # shared reader: the union schema of the SURVIVING files'
+            # roots (recorded, else inferred — a pruned read never gains
+            # a column only pruned files carry), per-root unions for
+            # widen-mixed widths, _metadata address columns for
+            # positional deltas
             return self._read_file_list(
                 fs,
-                [],
+                m,
                 with_pos=has_pos,
                 widen=_has_widen(m),
                 spec_map=self._root_fields(m),
@@ -3232,21 +3321,16 @@ class SnapshotTable:
         # no distinct: the anti-join keeps the same rows either way
         change_keys = changes.select(*key_cols)
 
-        affected = [
-            f
-            for f in m["files"]
-            if _file_partition(f, self.data_dir, pnames) in touched
-        ]
-        untouched = [f for f in m["files"] if f not in set(affected)]
+        affected, untouched = [], []
+        for f in m["files"]:
+            hit = _file_partition(f, self.data_dir, pnames) in touched
+            (affected if hit else untouched).append(f)
 
         kept = None
         if affected:
             # group by staged root so basePath recovers the partition cols
             parts = [
-                _drop_derived(
-                    self.spark.read.option("basePath", root).parquet(*fs),
-                    part_cols,
-                )
+                _drop_derived(self._parquet(m, fs, base_path=root), part_cols)
                 for root, fs in sorted(
                     _group_files_by_root(self.data_dir, affected).items()
                 )
@@ -3317,13 +3401,14 @@ class SnapshotTable:
         ]
         if len(small) < 2:
             return folded  # the delta fold (if any) was itself a compaction
-        keep = [f for f in m["files"] if f not in set(small)]
+        small_set = set(small)
+        keep = [f for f in m["files"] if f not in small_set]
         total = sum(self._file_size(m, f) for f in small)
         n_out = max(1, total // small_file_bytes + (1 if total % small_file_bytes else 0))
         # per-root unions when a widen op left mixed physical widths; the
         # journal itself is carried, so the rewrite stays raw-physical
         src = self._read_file_list(
-            small, [], widen=_has_widen(m), spec_map=self._root_fields(m)
+            small, m, widen=_has_widen(m), spec_map=self._root_fields(m)
         )
         sort_by = m.get("sort_by") or []
         if sort_by:
@@ -3409,13 +3494,11 @@ class SnapshotTable:
         rewrite = [f for fs in by_part.values() if len(fs) >= 2 for f in fs]
         if not rewrite:
             return None
-        keep = [f for f in m["files"] if f not in set(rewrite)]
+        rewrite_set = set(rewrite)
+        keep = [f for f in m["files"] if f not in rewrite_set]
 
         parts = [
-            _drop_derived(
-                self.spark.read.option("basePath", root).parquet(*fs),
-                part_cols,
-            )
+            _drop_derived(self._parquet(m, fs, base_path=root), part_cols)
             for root, fs in sorted(
                 _group_files_by_root(self.data_dir, rewrite).items()
             )
@@ -3585,7 +3668,7 @@ class SnapshotTable:
         if not sort_by:
             return None
         df = self._read_file_list(
-            pending, [], widen=False, spec_map=self._root_fields(m)
+            pending, m, widen=False, spec_map=self._root_fields(m)
         )
         num = self._sort_key_as_double(df, sort_by)
         if num is None:
@@ -3803,11 +3886,12 @@ class SnapshotTable:
         )
         for group in groups:
             m = self._load(f"v{self.current_version():08d}.json")
-            group = [f for f in group if f in set(m["files"])]
+            live = set(m["files"])
+            group = [f for f in group if f in live]
             if not group:
                 continue
             df = self._read_file_list(
-                group, [], widen=False, spec_map=self._root_fields(m)
+                group, m, widen=False, spec_map=self._root_fields(m)
             )
             if boundaries is not None:
                 exprs = sort_exprs(eff_sort, df)
@@ -3855,7 +3939,8 @@ class SnapshotTable:
         part_cols = m.get("partition_by") or []
         staged = self._stage(_partitioned_writer(out, part_cols))
         new_files = _staged_parquet_files(staged)
-        keep = [f for f in m["files"] if f not in set(group)]
+        in_group = set(group)
+        keep = [f for f in m["files"] if f not in in_group]
         return self._write_manifest(
             m,
             operation="rewrite-group",
@@ -3962,11 +4047,12 @@ class SnapshotTable:
             groups = groups[:max_groups]
         for group in groups:
             m = self._load(f"v{self.current_version():08d}.json")
-            group = [f for f in group if f in set(m["files"])]
+            live = set(m["files"])
+            group = [f for f in group if f in live]
             if len(group) < 2:
                 continue
             df = self._read_file_list(
-                group, [], widen=False, spec_map=self._root_fields(m)
+                group, m, widen=False, spec_map=self._root_fields(m)
             )
             # the merged run reclusters under the DECLARED order; range
             # partitioning makes its outputs value-disjoint, so a merged
@@ -4119,7 +4205,6 @@ class SnapshotTable:
             operation="add-files",
             files=list(pm.get("files", [])) + new_files,
             added_files=len(new_files),
-            added_rows=_footer_row_count(new_files),
         )
 
     def expire_snapshots(

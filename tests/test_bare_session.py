@@ -122,3 +122,26 @@ def test_snapshot_writes_leave_session_confs_unchanged(spark, tmp_path, prior):
             spark.conf.unset(_TS_TYPE)
         else:
             spark.conf.set(_TS_TYPE, saved)
+
+
+def test_snapshot_writes_read_one_conf_key(spark, tmp_path, monkeypatch):
+    """A commit and a merge read the one writer conf they pin, by key:
+    ``getAll`` fetches every session conf over py4j, dozens of round
+    trips a write."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from philotes_spark.sources.snapshots import SnapshotTable
+
+    def boom(self):
+        raise AssertionError("getAll on the snapshot write path")
+
+    saved = spark.conf.get(_TS_TYPE, None)
+    monkeypatch.setattr(RuntimeConfig, "getAll", property(boom))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    t.merge(
+        spark.createDataFrame([(2, "B")], "k long, v string"), key_cols=["k"]
+    )
+    monkeypatch.undo()
+    assert spark.conf.get(_TS_TYPE, None) == saved
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "a"), (2, "B")]

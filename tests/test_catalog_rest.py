@@ -1819,7 +1819,7 @@ def test_publish_late_append_pos_deleted_rows_not_divergent(
     m = tbl._resolve()
     late_files = sorted(set(m["files"]) - v1_files)
     doomed = (
-        tbl._read_file_list(late_files, [], with_pos=True)
+        tbl._read_file_list(late_files, m, with_pos=True)
         .filter("v = 3")
         .select(
             F.col("_pos_file").alias("file_path"),

@@ -644,3 +644,33 @@ def test_recluster_unclustered_table_skips_planning(spark, table, monkeypatch):
     monkeypatch.setattr(type(df), "rdd", property(boom))
     assert table._recluster(df, {}) is df
     assert table._recluster(df, {"sort_by": [], "zorder_by": []}) is df
+
+
+def test_mor_merge_runs_only_its_two_writes(spark, table, monkeypatch):
+    """A merge-on-read merge runs the delete-key write and the upsert
+    write and nothing else: whether the change set was empty is read
+    from the staged files' footers, not asked of the change set."""
+    table.commit(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), stats_cols=["k"])
+    changes = spark.createDataFrame(
+        [(1, "A", False), (2, None, True)], "k long, v string, _del boolean"
+    )
+    events = _spy_actions(spark, monkeypatch)
+    v = table.merge(changes, key_cols=["k"], delete_col="_del", mode="mor")
+    monkeypatch.undo()
+    assert events == ["write", "write"], events
+    assert v == 2 and table._resolve()["added_rows"] == 1
+    assert {r.k: r.v for r in table.read().collect()} == {1: "A", 3: "c"}
+
+
+def test_empty_mor_merge_commits_nothing_and_leaves_no_root(spark, table):
+    import os
+
+    table.commit(_df(spark, [(1, "a")]), stats_cols=["k"])
+    roots = sorted(os.listdir(table.data_dir))
+    empty = spark.createDataFrame(
+        [(1, "A", False)], "k long, v string, _del boolean"
+    ).filter("k < 0")
+    v = table.merge(empty, key_cols=["k"], delete_col="_del", mode="mor")
+    assert v == 1 and table.current_version() == 1
+    assert sorted(os.listdir(table.data_dir)) == roots
+    assert [tuple(r) for r in table.read().collect()] == [(1, "a")]

@@ -1251,3 +1251,222 @@ def test_full_rewrites_reset_deltas_and_schema_ops(spark, tmp_path):
     m = t._resolve()
     assert (m["deltas"], m["schema_ops"]) == ([], [])
     assert m["sort_by"] == ["k"] and m["properties"] == {"owner": "etl"}
+
+
+# --- recorded read schemas (root_schemas) ---------------------------------
+
+
+def _inferring(t: SnapshotTable) -> SnapshotTable:
+    """``t`` as seen through manifests without ``root_schemas`` (the
+    shape manifests had before the field): every read infers its schema
+    from the footers."""
+    legacy = SnapshotTable(t.spark, t.path)
+    load = legacy._load
+    legacy._load = lambda name: {
+        k: v for k, v in load(name).items() if k != "root_schemas"
+    }
+    return legacy
+
+
+def _same_read(got, want, what) -> None:
+    # StructType equality covers column order, types, nullability and
+    # field metadata
+    assert got.schema == want.schema, (what, got.schema, want.schema)
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, want.collect())
+    ), what
+
+
+def test_recorded_schemas_read_like_inference(spark, tmp_path):
+    """Every version of a table that went through additive evolution,
+    the four ALTERs, a schema rewrite, CoW and MoR merges, delta
+    compaction, adoption of a foreign file and a partition-spec
+    evolution reads with the same schema (column order included) and
+    rows whether the schema comes from the manifest or from inference;
+    so does a stats-pruned read over a subset of the roots."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from philotes_spark.sources.snapshots import _has_widen
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    cols = "k long, g long, x string, n int"
+    t.commit(
+        spark.createDataFrame(
+            [(i, i % 3, f"s{i}", i) for i in range(12)], cols
+        ).coalesce(2),
+        stats_cols=["k"],
+    )
+    t.commit(  # additive evolution: a new column, and another order —
+        # the read's column order then follows the roots' path order
+        spark.createDataFrame(
+            [(i / 2, i, i % 3, f"s{i}", i) for i in range(100, 106)],
+            "e double, " + cols,
+        ).coalesce(1)
+    )
+    t.alter_add_columns([("c2", "string")])
+    t.alter_rename_column("x", "x2")
+    t.alter_widen_column("n", "bigint")
+    t.alter_drop_column("c2")
+    t.materialize_schema()
+    applied = "k long, g long, x2 string, n bigint, e double"
+    t.merge(  # pruned CoW: only the file holding k=3 rewrites
+        spark.createDataFrame(
+            [(3, 0, "U3", 3, 1.5, False), (4, 1, None, None, None, True)],
+            applied + ", _del boolean",
+        ),
+        key_cols=["k"], delete_col="_del",
+    )
+    t.merge(
+        spark.createDataFrame(
+            [(5, 2, "M5", 5, 2.5, False)], applied + ", _del boolean"
+        ),
+        key_cols=["k"], delete_col="_del", mode="mor",
+    )
+    t.compact_deltas()
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(  # no Spark schema in its footer; columns reordered
+        pa.table({
+            "e": [9.5], "k": pa.array([200], pa.int64()),
+            "g": pa.array([2], pa.int64()), "x2": ["f"],
+            "n": pa.array([200], pa.int64()),
+        }),
+        str(foreign / "f.parquet"),
+    )
+    before = set(t._resolve()["files"])
+    t.add_files(str(foreign))
+    (adopted,) = set(t._resolve()["files"]) - before
+    adopted_root = os.path.relpath(adopted, t.data_dir).split(os.sep)[0]
+    t.evolve_partition_spec(["g"])
+    t.commit(  # hive-partitioned append under the evolved spec
+        spark.createDataFrame(
+            [(i, i % 3, f"p{i}", i, 0.5) for i in range(300, 306)], applied
+        ).coalesce(1)
+    )
+
+    legacy = _inferring(t)
+    for v in range(1, t.current_version() + 1):
+        _same_read(t.read(version=v), legacy.read(version=v), v)
+        m = t._resolve(version=v)
+        if not _has_widen(m) and not any(t._root_fields(m).values()):
+            # a flat read IS one mergeSchema scan of the version's files
+            assert (
+                t._read_file_list(m["files"], m).schema
+                == spark.read.option("mergeSchema", "true")
+                .parquet(*m["files"]).schema
+            ), v
+    m = t._resolve()
+    roots = {os.path.relpath(f, t.data_dir).split(os.sep)[0] for f in m["files"]}
+    assert set(m["root_schemas"]) == roots - {adopted_root}
+
+    # a pruned read takes the schema of the SURVIVING roots only: at v2
+    # the probe misses the root that carries e
+    pruned = t.read_where("k", 0, 5, version=2)
+    assert "e" not in pruned.columns
+    _same_read(pruned, legacy.read_where("k", 0, 5, version=2), "v2 pruned")
+    _same_read(
+        t.read_where("k", 290, 310), legacy.read_where("k", 290, 310), "head"
+    )
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, read back through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_root_table(spark, path) -> SnapshotTable:
+    t = SnapshotTable(spark, path)
+    rows = "k long, v string"
+    t.commit(
+        spark.createDataFrame([(i, f"a{i}") for i in range(100)], rows)
+        .coalesce(1),
+        stats_cols=["k"],
+    )
+    t.commit(
+        spark.createDataFrame([(i, f"b{i}") for i in range(1000, 1100)], rows)
+        .coalesce(1)
+    )
+    return t
+
+
+def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
+    """With the schema in the manifest, a range probe is one scan job,
+    not an inference job plus the scan, and a pruned CoW merge saves
+    the inference job over its affected files (6 jobs here, against 7
+    when the schema is inferred)."""
+    t = _two_root_table(spark, str(tmp_path / "t"))
+    legacy = _inferring(_two_root_table(spark, str(tmp_path / "legacy")))
+    assert _jobs(spark, lambda: t.read_where("k", 0, 50).collect()) == 1
+    assert _jobs(spark, lambda: legacy.read_where("k", 0, 50).collect()) == 2
+    changes = spark.createDataFrame(
+        [(5, "U5", False), (7, None, True)], "k long, v string, _del boolean"
+    )
+    for tbl, jobs in ((t, 6), (legacy, 7)):
+        assert _jobs(
+            spark,
+            lambda: tbl.merge(changes, key_cols=["k"], delete_col="_del"),
+        ) == jobs
+        got = {r.k: r.v for r in tbl.read().collect()}
+        assert got[5] == "U5" and 7 not in got and len(got) == 199
+
+
+def _footer_opens(monkeypatch) -> list[str]:
+    """Record the path of every ``pyarrow.parquet.ParquetFile`` open."""
+    import pyarrow.parquet as pq
+
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    class Spy(real):
+        def __init__(self, source, *a, **kw):
+            opened.append(str(source))
+            super().__init__(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    return opened
+
+
+def test_commit_reads_each_new_footer_once(spark, tmp_path, monkeypatch):
+    """An append and a CoW merge read each new data file's footer once,
+    for its size, rows, stats and schema together, and no other file's."""
+    from collections import Counter
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    rows = "k long, v string"
+    t.commit(
+        spark.createDataFrame([(i, f"a{i}") for i in range(40)], rows)
+        .repartition(2),
+        stats_cols=["k"],
+    )
+    for step in ("append", "merge"):
+        before = set(t._resolve()["files"])
+        opened = _footer_opens(monkeypatch)
+        if step == "append":
+            t.commit(
+                spark.createDataFrame([(i, f"b{i}") for i in range(40, 60)], rows)
+                .repartition(2)
+            )
+        else:
+            t.merge(
+                spark.createDataFrame([(3, "U3")], rows), key_cols=["k"]
+            )
+        monkeypatch.undo()
+        m = t._resolve()
+        new = set(m["files"]) - before
+        assert new and Counter(opened) == Counter(new), (step, opened)
+        assert set(m["file_meta"]) == set(m["files"]), step
+        assert all(m["file_stats"][f].get("k") for f in new), step
+        assert m["root_schemas"], step
+    assert m["added_rows"] == 1
+    assert t._resolve(version=2)["added_rows"] == 20
