@@ -877,6 +877,7 @@ class RestCatalog:
         import pyarrow.parquet as pq
 
         from philotes_spark.sources.iceberg_manifest import file_provenance
+        from philotes_spark.sources.snapshots import _has_widen
 
         manifest = snap._resolve(version=version)
         added_at, deltas = file_provenance(snap, manifest["version"])
@@ -904,18 +905,15 @@ class RestCatalog:
             ]
             if not late:
                 continue
-            keys = snap.spark.read.parquet(*d["key_files"]).select(
-                *d["key_cols"]
-            )
+            keys = snap._delta_scan(d, "key").select(*d["key_cols"])
             late_rows = snap._apply_schema_ops(
                 snap._read_file_list(
                     late,
                     manifest,
                     with_pos=has_pos,
-                    widen=any(
-                        op.get("op") == "widen"
-                        for op in manifest.get("schema_ops", [])
-                    ),
+                    widen=_has_widen(manifest),
+                    # each late root under the spec it was written under
+                    spec_map=snap._root_fields(manifest),
                 ),
                 manifest,
             )
@@ -927,17 +925,13 @@ class RestCatalog:
             # rewrite (ADVICE r10 #3). Anti-join them out first, exactly
             # as rewrite_late_appends does.
             if has_pos:
-                from pyspark.sql import functions as F
-
                 for d2, _ in deltas:
                     if d2.get("type") != "pos":
                         continue
-                    pos = snap.spark.read.parquet(*d2["pos_files"]).select(
-                        F.col("file_path").alias("_pos_file"),
-                        F.col("pos").alias("_pos_index"),
-                    )
                     late_rows = late_rows.join(
-                        pos, ["_pos_file", "_pos_index"], "left_anti"
+                        snap._delta_scan(d2, "pos"),
+                        ["_pos_file", "_pos_index"],
+                        "left_anti",
                     )
                 late_rows = late_rows.drop("_pos_file", "_pos_index")
             if late_rows.join(keys, d["key_cols"], "left_semi").take(1):

@@ -30,6 +30,7 @@ references.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -78,6 +79,37 @@ def _upsert_count(delete_col: str | None):
     is in neither (its key is removed, not upserted)."""
     n = F.count_if(~F.col(delete_col)) if delete_col else F.count(F.lit(1))
     return n.alias("n_up")
+
+
+@contextlib.contextmanager
+def _change_set_once(changes: DataFrame, *summary):
+    """Evaluate a copy-on-write merge's change set ONCE. Yields
+    ``(rows, values)``: the rows materialized by a local checkpoint, and
+    the ``summary`` aggregates observed on the same pass (a dict by
+    alias). The checkpoint's blocks are released when the block exits,
+    normally or by an exception.
+
+    Every use of a change set re-runs its lineage (a CDC batch's dedup
+    window is a shuffle), and a nondeterministic lineage may answer
+    differently each time, so the key range that prunes the rewrite and
+    the rows it writes must come from one evaluation. A checkpoint, not
+    ``persist()``: the checkpoint query runs under AQE, so the rows keep
+    that query's coalesced partitioning and the write lands the same
+    files, where a cached plan keeps every shuffle partition. The
+    trade-off: a local checkpoint lives on the executors and cannot be
+    recomputed, so a merge that loses one fails, and commits nothing,
+    because the manifest is written last."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    rows = changes.observe(obs, *summary).localCheckpoint(eager=True)
+    rdd_id = rows._jdf.logicalPlan().rdd().id()
+    try:
+        yield rows, obs.get
+    finally:
+        # RDD.unpersist logs a WARN on every call for a locally
+        # checkpointed RDD; unpersistRDD frees the same blocks quietly
+        rows.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
 
 
 def _drop_derived(df: DataFrame, part_cols: list[str]) -> DataFrame:
@@ -323,18 +355,6 @@ def _footer_map(files: list[str], fn):
         return list(pool.map(fn, files))
 
 
-def _footer_rows(files: list[str]) -> dict[str, int]:
-    """Row count of each parquet file, from its footer alone — for the
-    delta and empty-part checks of files a manifest does not list. The
-    writer recorded every count, so no ``df.count()`` re-runs the plan
-    that wrote them."""
-    import pyarrow.parquet as pq
-
-    return dict(
-        zip(files, _footer_map(files, lambda f: pq.ParquetFile(f).metadata.num_rows))
-    )
-
-
 # the footer key Spark stores each written file's schema under (JSON),
 # and the key its schema inference reads (readSchemaFromFooter)
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -375,6 +395,20 @@ def _footer_facts(f: str, cols: list[str]) -> dict | None:
     if not (isinstance(schema, dict) and schema.get("type") == "struct"):
         schema = None
     return {"size": size, "rows": md.num_rows, "stats": per, "schema": schema}
+
+
+def _staged_nonempty(staged: str) -> tuple[dict[str, int], dict | None]:
+    """The non-empty files of one staged write with their row counts, and
+    the Spark schema their footers agree on (None when they carry none or
+    disagree), from one footer read per file and no ``df.count()``. Empty
+    part files are left out: each would become a manifest entry and a
+    per-read scan task."""
+    files = _staged_parquet_files(staged)
+    facts = _footer_map(files, lambda f: _footer_facts(f, []))
+    rows = {f: x["rows"] for f, x in zip(files, facts) if x["rows"]}
+    schemas = [x["schema"] for x in facts if x["rows"]]
+    same = bool(schemas) and all(s == schemas[0] for s in schemas)
+    return rows, schemas[0] if same else None
 
 
 def _merge_schemas(left: dict, right: dict) -> dict | None:
@@ -1621,11 +1655,14 @@ class SnapshotTable:
         intersects the change-set's range are rewritten; every other file
         moves into the new snapshot by reference (Iceberg-style pruned
         CoW). Without stats the whole table rewrites (correct, logged in
-        the manifest as full rewrite). The anti-join is key-partitioned;
-        nothing collects to the driver but ONE four-value aggregate over
-        the change set — row count (0 ⇒ no-op), upsert count (the
-        manifest's ``added_rows``) and the leading key's min/max (file
-        pruning) — the merge's only Spark action before the write.
+        the manifest as full rewrite). The change set is evaluated once
+        (:func:`_change_set_once`): one locally checkpointed pass gives
+        both its rows and, observed on the way, its row count (0 ⇒
+        no-op), upsert count (the manifest's ``added_rows``) and leading
+        key's min/max (file pruning). The upserts and the anti-join keys
+        read that pass, so the change set's lineage runs once per merge.
+        A merge that loses an executor holding the checkpoint fails and
+        commits nothing.
 
         ``mode='mor'`` is the merge-on-READ twin (Iceberg v2 equality
         deletes): the change set is written as a DELTA — an equality-
@@ -1660,76 +1697,76 @@ class SnapshotTable:
         k0 = key_cols[0]
         stats = m.get("file_stats", {})
         prune = all(f in stats and k0 in stats[f] for f in m["files"])
-        # every change-set fact the merge needs, in ONE pass: each action
-        # re-runs the change set's whole lineage (a CDC dedup window is a
-        # shuffle), so the empty test, the upsert count and the key range
-        # share one aggregate
+        # every change-set fact the merge needs, observed on the one pass
+        # that materializes its rows
         aggs = [F.count(F.lit(1)).alias("n"), _upsert_count(delete_col)]
         if prune:
             aggs += [F.min(k0).alias("lo"), F.max(k0).alias("hi")]
-        summary = changes.agg(*aggs).collect()[0]
-        if not summary.n:
-            # empty change set (e.g. a filtered/replayed CDC micro-batch):
-            # a no-op, not a full-table rewrite plus a phantom version
-            return parent
+        with _change_set_once(changes, *aggs) as (changes, summary):
+            if not summary["n"]:
+                # empty change set (e.g. a filtered/replayed CDC
+                # micro-batch): a no-op, not a full-table rewrite plus a
+                # phantom version
+                return parent
 
-        upserts = changes
-        if delete_col is not None:
-            upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-        # no distinct: a left-anti join keeps the same rows whether or not
-        # the keys repeat, and the distinct costs a shuffle
-        change_keys = changes.select(*key_cols)
+            upserts = changes
+            if delete_col is not None:
+                upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
+            # no distinct: a left-anti join keeps the same rows whether or
+            # not the keys repeat, and the distinct costs a shuffle
+            change_keys = changes.select(*key_cols)
 
-        affected, untouched = list(m["files"]), []
-        if prune and summary.lo is not None:
-            # timestamp/date keys compare in the stats' stored ISO text
-            # form (r15, same fix as scan planning) — without it a
-            # datetime key hit the incomparable-⇒-keep path and pruned
-            # CoW silently rewrote the whole table
-            lo, hi = _probe_safe(summary.lo), _probe_safe(summary.hi)
-            affected = []
-            for f in m["files"]:
-                if _range_overlaps(stats[f][k0], lo, hi):
-                    affected.append(f)
-                else:
-                    untouched.append(f)
+            affected, untouched = list(m["files"]), []
+            if prune and summary["lo"] is not None:
+                # timestamp/date keys compare in the stats' stored ISO
+                # text form (r15, same fix as scan planning) — without it
+                # a datetime key hit the incomparable-⇒-keep path and
+                # pruned CoW silently rewrote the whole table
+                lo, hi = _probe_safe(summary["lo"]), _probe_safe(summary["hi"])
+                affected = []
+                for f in m["files"]:
+                    if _range_overlaps(stats[f][k0], lo, hi):
+                        affected.append(f)
+                    else:
+                        untouched.append(f)
 
-        kept = None
-        if affected:
-            # the union schema of the affected roots + schema ops:
-            # affected files may straddle an ALTER COLUMN, and the
-            # rewrite must land the APPLIED schema so it unions with the
-            # (read()-shaped) change set (per-root unions when a widen
-            # op left mixed physical widths)
-            current = self._apply_schema_ops(
-                self._read_file_list(
-                    affected,
+            kept = None
+            if affected:
+                # the union schema of the affected roots + schema ops:
+                # affected files may straddle an ALTER COLUMN, and the
+                # rewrite must land the APPLIED schema so it unions with
+                # the (read()-shaped) change set (per-root unions when a
+                # widen op left mixed physical widths)
+                current = self._apply_schema_ops(
+                    self._read_file_list(
+                        affected,
+                        m,
+                        widen=_has_widen(m),
+                        # old-spec roots surface their path-derived
+                        # partition columns (spec evolution): without the
+                        # map the rewrite would silently drop them from
+                        # the rewritten rows
+                        spec_map=self._root_fields(m),
+                    ),
                     m,
-                    widen=_has_widen(m),
-                    # old-spec roots surface their path-derived partition
-                    # columns (spec evolution): without the map the rewrite
-                    # would silently drop them from the rewritten rows
-                    spec_map=self._root_fields(m),
-                ),
-                m,
+                )
+                kept = current.join(change_keys, key_cols, "left_anti")
+            new_data = (
+                kept.unionByName(upserts, allowMissingColumns=False)
+                if kept is not None
+                else upserts
             )
-            kept = current.join(change_keys, key_cols, "left_anti")
-        new_data = (
-            kept.unionByName(upserts, allowMissingColumns=False)
-            if kept is not None
-            else upserts
-        )
-        # preserve the table's clustering (sort_by OR zorder_by) through
-        # the rewrite; untouched files keep theirs by reference
-        staged = self._stage(self._recluster(new_data, m).write)
-        new_files = _staged_parquet_files(staged)
-        return self._write_manifest(
-            m,
-            operation="merge",
-            files=untouched + new_files,
-            added_files=len(new_files),
-            added_rows=summary.n_up,
-        )
+            # preserve the table's clustering (sort_by OR zorder_by)
+            # through the rewrite; untouched files keep theirs by reference
+            staged = self._stage(self._recluster(new_data, m).write)
+            new_files = _staged_parquet_files(staged)
+            return self._write_manifest(
+                m,
+                operation="merge",
+                files=untouched + new_files,
+                added_files=len(new_files),
+                added_rows=summary["n_up"],
+            )
 
     def _merge_mor(
         self,
@@ -1742,7 +1779,7 @@ class SnapshotTable:
         :meth:`merge` mode='mor'). O(changes) I/O — no base file is read
         or rewritten. The two writes are its only Spark actions: the
         footers of the staged key files say whether the change set was
-        empty."""
+        empty, and give the schemas the delta's reads use."""
         import shutil
 
         upserts = changes
@@ -1750,28 +1787,27 @@ class SnapshotTable:
             upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
         key_staged = self._stage(changes.select(*key_cols).distinct().write)
         up_staged = self._stage(upserts.write)
-        key_rows = _footer_rows(_staged_parquet_files(key_staged))
-        up_rows = _footer_rows(_staged_parquet_files(up_staged))
-        if not any(key_rows.values()):
+        keys, key_schema = _staged_nonempty(key_staged)
+        ups, up_schema = _staged_nonempty(up_staged)
+        if not keys:
             # every change row has a key, so no keys ⇔ an empty change
             # set: a no-op that leaves no staged root behind
             shutil.rmtree(key_staged)
             shutil.rmtree(up_staged)
             return m["version"]
-        # drop empty part files: each staged file becomes a delete- or
-        # data-manifest entry and a per-read scan task
-        up_files = [f for f, n in up_rows.items() if n]
         delta = {
-            "key_files": [f for f, n in key_rows.items() if n],
-            "upsert_files": up_files,
+            "key_files": list(keys),
+            "upsert_files": list(ups),
             "key_cols": list(key_cols),
+            "key_schema": key_schema,
+            "upsert_schema": up_schema,
         }
         return self._write_manifest(
             m,
             operation="merge-mor",
             files=m["files"],
-            added_files=len(up_files),
-            added_rows=sum(up_rows.values()),
+            added_files=len(ups),
+            added_rows=sum(ups.values()),
             deltas=list(m.get("deltas", [])) + [delta],
         )
 
@@ -1876,6 +1912,8 @@ class SnapshotTable:
         ``compact_deltas()`` first (Iceberg sequencing has the same
         constraint: position deletes only apply to data files of equal
         or older sequence numbers)."""
+        import shutil
+
         parent = self.current_version()
         if not parent:
             raise FileNotFoundError(f"no snapshots at {self.path}")
@@ -1903,16 +1941,15 @@ class SnapshotTable:
             F.col("_pos_file").alias("file_path"),
             F.col("_pos_index").alias("pos"),
         )
-        if not doomed.take(1):
-            return parent
+        # the write is the only Spark action: its footers say whether
+        # any row matched
         staged = self._stage(doomed.write)
-        # empty part files (idle partitions of the doomed frame) would
-        # each become a delete-manifest entry — drop them (footer check,
-        # no data scan); non-empty by the take(1) guard above
-        pos_files = [
-            f for f, n in _footer_rows(_staged_parquet_files(staged)).items() if n
-        ]
-        delta = {"type": "pos", "pos_files": pos_files}
+        pos, pos_schema = _staged_nonempty(staged)
+        if not pos:
+            shutil.rmtree(staged)  # nothing matched: no version, no root
+            return parent
+        pos_files = list(pos)
+        delta = {"type": "pos", "pos_files": pos_files, "pos_schema": pos_schema}
         return self._write_manifest(
             m,
             operation="delete-pos",
@@ -1994,13 +2031,10 @@ class SnapshotTable:
         )
         for d in m.get("deltas", []):
             if d.get("type") == "pos":
-                pos = self.spark.read.parquet(*d["pos_files"]).select(
-                    F.col("file_path").alias("_pos_file"),
-                    F.col("pos").alias("_pos_index"),
-                )
+                pos = self._delta_scan(d, "pos")
                 base = base.join(pos, ["_pos_file", "_pos_index"], "left_anti")
             else:
-                keys = self.spark.read.parquet(*d["key_files"])
+                keys = self._delta_scan(d, "key")
                 base = base.join(keys, d["key_cols"], "left_anti")
         if has_pos:
             base = base.drop("_pos_file", "_pos_index")
@@ -2008,9 +2042,7 @@ class SnapshotTable:
         staged = self._stage(
             _partitioned_writer(self._recluster(base, m), part_cols)
         )
-        new_files = [
-            f for f, n in _footer_rows(_staged_parquet_files(staged)).items() if n
-        ]
+        new_files = list(_staged_nonempty(staged)[0])
         return self._write_manifest(
             m,
             operation="rewrite-late-appends",
@@ -2029,20 +2061,39 @@ class SnapshotTable:
         anti-joins over one base scan."""
         for d in m.get("deltas", []):
             if d.get("type") == "pos":
-                pos = self.spark.read.parquet(*d["pos_files"]).select(
-                    F.col("file_path").alias("_pos_file"),
-                    F.col("pos").alias("_pos_index"),
-                )
+                pos = self._delta_scan(d, "pos")
                 base = base.join(pos, ["_pos_file", "_pos_index"], "left_anti")
                 continue
-            keys = self.spark.read.parquet(*d["key_files"])
-            base = base.join(keys, d["key_cols"], "left_anti")
+            base = base.join(self._delta_scan(d, "key"), d["key_cols"], "left_anti")
             if d["upsert_files"]:
-                ups = self.spark.read.option("mergeSchema", "true").parquet(
-                    *d["upsert_files"]
+                base = base.unionByName(
+                    self._delta_scan(d, "upsert"), allowMissingColumns=True
                 )
-                base = base.unionByName(ups, allowMissingColumns=True)
         return base
+
+    def _delta_scan(self, d: dict, kind: str) -> DataFrame:
+        """Scan one delta's ``kind`` files (``key``, ``upsert`` or
+        ``pos``) with the Spark schema the delta recorded from their
+        footers (``<kind>_schema``), so the read runs no inference job,
+        as :meth:`_parquet` does for data files. Deltas without a record
+        infer it, upsert files with ``mergeSchema`` as before. Positional
+        rows come back as the ``_pos_file``/``_pos_index`` address pair
+        they anti-join on."""
+        schema = d.get(f"{kind}_schema")
+        rd = self.spark.read
+        if schema is not None:
+            from pyspark.sql.types import StructType
+
+            rd = rd.schema(StructType.fromJson(schema))
+        elif kind == "upsert":
+            rd = rd.option("mergeSchema", "true")
+        out = rd.parquet(*d[f"{kind}_files"])
+        if kind == "pos":
+            out = out.select(
+                F.col("file_path").alias("_pos_file"),
+                F.col("pos").alias("_pos_index"),
+            )
+        return out
 
     # --- reads (B5) ----------------------------------------------------------
 
@@ -3287,9 +3338,11 @@ class SnapshotTable:
     ) -> int:
         """Partition-pruned CoW merge for hive-partitioned snapshots: only
         the partitions the change set touches are rewritten; every file of
-        an untouched partition carries forward by reference. The touched
-        partition list collects to the driver — bounded by the partition
-        grain (days/types), never by rows."""
+        an untouched partition carries forward by reference. The change
+        set is evaluated once, as in :meth:`merge`: the touched
+        partitions (a set bounded by the partition grain, days/types,
+        never by rows) and the upsert count are observed on the pass
+        that materializes its rows."""
         part_cols = m["partition_by"]
         sources = [pf.source for pf in parse_spec(part_cols)]
         missing = [c for c in sources if c not in changes.columns]
@@ -3308,60 +3361,65 @@ class SnapshotTable:
         # touched partitions key on the hive PATH fields: for transform
         # specs the change rows get the same derived ts_day/id_bucket
         # values the writer lands in paths, so classification agrees.
-        # ONE action over the change set (see merge()): the touched
-        # partitions with their upsert counts
+        # Observed on the change set's one pass (see merge()): the
+        # touched partitions and the upsert count
         ch, pnames = with_partition_cols(changes, part_cols)
-        groups = ch.groupBy(*pnames).agg(_upsert_count(delete_col)).collect()
-        if not groups:
-            return m["version"]  # empty change set: no-op
-        touched = {_partition_key(r, pnames) for r in groups}
-        upserts = changes
-        if delete_col is not None:
-            upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-        # no distinct: the anti-join keeps the same rows either way
-        change_keys = changes.select(*key_cols)
+        with _change_set_once(
+            ch,
+            F.collect_set(F.struct(*pnames)).alias("parts"),
+            _upsert_count(delete_col),
+        ) as (ch, summary):
+            if not summary["parts"]:
+                return m["version"]  # empty change set: no-op
+            touched = {_partition_key(r, pnames) for r in summary["parts"]}
+            changes = ch.select(*changes.columns)
+            upserts = changes
+            if delete_col is not None:
+                upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
+            # no distinct: the anti-join keeps the same rows either way
+            change_keys = changes.select(*key_cols)
 
-        affected, untouched = [], []
-        for f in m["files"]:
-            hit = _file_partition(f, self.data_dir, pnames) in touched
-            (affected if hit else untouched).append(f)
+            affected, untouched = [], []
+            for f in m["files"]:
+                hit = _file_partition(f, self.data_dir, pnames) in touched
+                (affected if hit else untouched).append(f)
 
-        kept = None
-        if affected:
-            # group by staged root so basePath recovers the partition cols
-            parts = [
-                _drop_derived(self._parquet(m, fs, base_path=root), part_cols)
-                for root, fs in sorted(
-                    _group_files_by_root(self.data_dir, affected).items()
+            kept = None
+            if affected:
+                # group by staged root so basePath recovers the partition cols
+                parts = [
+                    _drop_derived(self._parquet(m, fs, base_path=root), part_cols)
+                    for root, fs in sorted(
+                        _group_files_by_root(self.data_dir, affected).items()
+                    )
+                ]
+                cur = parts[0]
+                for p in parts[1:]:
+                    cur = cur.unionByName(p, allowMissingColumns=True)
+                # rewritten partitions land the APPLIED schema (see merge())
+                kept = self._apply_schema_ops(cur, m).join(
+                    change_keys, key_cols, "left_anti"
                 )
-            ]
-            cur = parts[0]
-            for p in parts[1:]:
-                cur = cur.unionByName(p, allowMissingColumns=True)
-            # rewritten partitions land the APPLIED schema (see merge())
-            kept = self._apply_schema_ops(cur, m).join(
-                change_keys, key_cols, "left_anti"
+            new_data = (
+                kept.unionByName(upserts.select(*kept.columns))
+                if kept is not None
+                else upserts
             )
-        new_data = (
-            kept.unionByName(upserts.select(*kept.columns))
-            if kept is not None
-            else upserts
-        )
-        sort_by = m.get("sort_by") or []
-        if sort_by:
-            # preserve in-file clustering through the partitioned rewrite
-            new_data = new_data.sortWithinPartitions(
-                *sort_exprs(sort_by, new_data)
+            sort_by = m.get("sort_by") or []
+            if sort_by:
+                # preserve in-file clustering through the partitioned rewrite
+                new_data = new_data.sortWithinPartitions(
+                    *sort_exprs(sort_by, new_data)
+                )
+            staged = self._stage(_partitioned_writer(new_data, part_cols))
+            new_files = _staged_parquet_files(staged)
+            return self._write_manifest(
+                m,
+                operation="merge",
+                files=untouched + new_files,
+                added_files=len(new_files),
+                added_rows=summary["n_up"],
             )
-        staged = self._stage(_partitioned_writer(new_data, part_cols))
-        new_files = _staged_parquet_files(staged)
-        return self._write_manifest(
-            m,
-            operation="merge",
-            files=untouched + new_files,
-            added_files=len(new_files),
-            added_rows=sum(r.n_up for r in groups),
-        )
 
     def compact(self, small_file_bytes: int = 32 * 1024 * 1024) -> int | None:
         """OPTIMIZE-style small-file compaction: rewrite every data file

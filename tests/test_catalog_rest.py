@@ -1022,6 +1022,48 @@ def test_rewrite_late_appends_partitioned_with_stacked_pos_delta(
     assert _readback_equal(spark, tbl, "ns", "t_lp", cat) == 9
 
 
+def test_publish_divergence_check_reads_late_roots_under_their_spec(
+    mock_catalog, spark, tmp_path
+):
+    """The late-append divergence check reads each late root under the
+    partition spec it was written under: after the default spec evolved
+    to unpartitioned, a hive-partitioned late root still surfaces its
+    path column, so a delete key that spans it is matched (instead of
+    the check failing to resolve the column)."""
+    import pytest as _pytest
+
+    from philotes_spark.sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "late_spec"))
+    rows = "k long, par string"
+    tbl.commit(
+        spark.createDataFrame(
+            [(i, "even" if i % 2 == 0 else "odd") for i in range(10)], rows
+        ).coalesce(1),
+        partition_by=["par"],
+    )
+    tbl.merge(  # v2: eq delta deleting (3, odd)
+        spark.createDataFrame([(3, "odd", True)], rows + ", _del boolean"),
+        key_cols=["k", "par"],
+        delete_col="_del",
+        mode="mor",
+    )
+    # v3: a partitioned late append re-introducing the deleted key
+    tbl.commit(
+        spark.createDataFrame([(3, "odd"), (40, "even")], rows).coalesce(1)
+    )
+    tbl.evolve_partition_spec([])  # v4: the default spec is unpartitioned
+    assert tbl.read().count() == 10  # 10 - {3} + {40} (3 re-deleted)
+    cat = RestCatalog(f"http://127.0.0.1:{mock_catalog.port}", "wh")
+    with _pytest.raises(ValueError, match="rewrite_late_appends"):
+        cat.publish_snapshot("ns", "t_ls", tbl)
+    assert tbl.rewrite_late_appends() is not None
+    assert tbl.read().count() == 10
+    cat.publish_snapshot("ns", "t_ls", tbl)
+    cat.verify_publish("ns", "t_ls", tbl)
+    assert _readback_equal(spark, tbl, "ns", "t_ls", cat) == 10
+
+
 def test_v2_metadata_carries_refs(spark, tmp_path):
     """Tags surface as v2 `refs` beside the implicit main branch, and the
     validator rejects refs pointing at unknown snapshots."""

@@ -513,7 +513,10 @@ def test_merge_prunes_with_timestamp_key(spark, tmp_path):
     assert got[dt.datetime(2024, 6, 1, 3)] == "JUN3" and len(got) == 20
 
 
-_ACTIONS = ("collect", "take", "count", "first", "head", "toArrow", "toPandas")
+_ACTIONS = (
+    "collect", "take", "count", "first", "head", "toArrow", "toPandas",
+    "localCheckpoint", "checkpoint",
+)
 
 
 def _spy_actions(spark, monkeypatch) -> list[str]:
@@ -549,10 +552,11 @@ def _spy_actions(spark, monkeypatch) -> list[str]:
 def test_pruned_cow_merge_runs_one_action_before_the_write(
     spark, table, monkeypatch
 ):
-    """The CoW merge asks the change set for ONE aggregate — row count,
-    upsert count and key range together — then writes: every action
-    re-runs the change set's lineage (a dedup window shuffle in the CDC
-    sink), so each extra one costs a pass."""
+    """The CoW merge evaluates the change set ONCE — a local checkpoint
+    that observes row count, upsert count and key range on the way —
+    then writes from it: every action re-runs the change set's lineage
+    (a dedup window shuffle in the CDC sink), so each extra one costs a
+    pass."""
     lo = _df(spark, [(i, f"lo{i}") for i in range(0, 100)]).coalesce(1)
     hi = _df(spark, [(i, f"hi{i}") for i in range(1000, 1100)]).coalesce(1)
     table.commit(lo, stats_cols=["k"])
@@ -565,7 +569,7 @@ def test_pruned_cow_merge_runs_one_action_before_the_write(
     events = _spy_actions(spark, monkeypatch)
     table.merge(changes, key_cols=["k"], delete_col="_del")
     monkeypatch.undo()
-    assert events == ["collect", "write"], events
+    assert events == ["localCheckpoint", "write"], events
     m = table._resolve()
     assert m["added_rows"] == 2
     hi_files = [f for f in m1["files"] if m1["file_stats"][f]["k"][0] >= 1000]
@@ -594,7 +598,7 @@ def test_partitioned_merge_runs_one_action_before_the_write(
     events = _spy_actions(spark, monkeypatch)
     p.merge(changes, key_cols=["k"], delete_col="_del")
     monkeypatch.undo()
-    assert events == ["collect", "write"], events
+    assert events == ["localCheckpoint", "write"], events
     assert p._resolve()["added_rows"] == 2
     got = {r.k: r.v for r in p.read().collect()}
     assert got[0] == "NEW0" and got[41] == "NEW41" and 5 not in got
@@ -674,3 +678,95 @@ def test_empty_mor_merge_commits_nothing_and_leaves_no_root(spark, table):
     assert v == 1 and table.current_version() == 1
     assert sorted(os.listdir(table.data_dir)) == roots
     assert [tuple(r) for r in table.read().collect()] == [(1, "a")]
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_merge_evaluates_each_change_row_once(spark, tmp_path, partitioned):
+    """The summary, the anti-join keys and the upserts of a copy-on-write
+    merge all read ONE pass over the change set: a nondeterministic UDF
+    on the key (which no plan may reuse or fold) runs once per change
+    row."""
+    from pyspark.sql.types import LongType
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    schema = "k long, v string, b long"
+    t.commit(
+        spark.createDataFrame([(k, f"v{k}", k % 2) for k in range(20)], schema)
+        .coalesce(1),
+        stats_cols=["k"],
+        partition_by=["b"] if partitioned else None,
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def tap(k):
+        calls.add(1)
+        return k
+
+    changes = spark.createDataFrame(
+        [(2, "U2", 0, False), (3, None, 1, True), (25, "I25", 1, False)],
+        schema + ", _del boolean",
+    ).withColumn("k", F.udf(tap, LongType()).asNondeterministic()("k"))
+    t.merge(changes, key_cols=["k"], delete_col="_del")
+    assert calls.value == 3
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 20 and got[2] == "U2" and got[25] == "I25"
+    assert 3 not in got
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_merge_leaves_nothing_in_storage(
+    spark, tmp_path, monkeypatch, partitioned
+):
+    """The change set's checkpoint is released when the merge returns:
+    after a merge, an empty merge, and a merge whose write raises."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    schema = "k long, v string, b long"
+    t.commit(
+        spark.createDataFrame([(k, f"v{k}", k % 2) for k in range(20)], schema)
+        .coalesce(1),
+        stats_cols=["k"],
+        partition_by=["b"] if partitioned else None,
+    )
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    before = stored()
+    changes = spark.createDataFrame(
+        [(2, "U2", 0, False), (25, "I25", 1, False)], schema + ", _del boolean"
+    )
+    assert t.merge(changes, key_cols=["k"], delete_col="_del") == 2
+    assert stored() <= before
+    assert t.merge(
+        changes.filter("k < 0"), key_cols=["k"], delete_col="_del"
+    ) == 2
+    assert stored() <= before
+
+    def failing_stage(self, writer):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(SnapshotTable, "_stage", failing_stage)
+    with pytest.raises(OSError, match="disk full"):
+        t.merge(changes, key_cols=["k"], delete_col="_del")
+    monkeypatch.undo()
+    assert stored() <= before
+    assert t.current_version() == 2
+
+
+def test_positional_delete_runs_only_its_write(spark, table, monkeypatch):
+    """A positional delete runs its write and nothing else: the staged
+    files' footers say whether any row matched. A delete that matches
+    nothing adds no version and leaves no staged root."""
+    import os
+
+    table.commit(_df(spark, [(k, f"v{k}") for k in range(10)]).coalesce(1))
+    events = _spy_actions(spark, monkeypatch)
+    assert table.delete_where_positional("k < 3") == 2
+    monkeypatch.undo()
+    assert events == ["write"], events
+    roots = sorted(os.listdir(table.data_dir))
+    assert table.delete_where_positional("k > 100") == 2
+    assert table.current_version() == 2
+    assert sorted(os.listdir(table.data_dir)) == roots
+    assert sorted(r.k for r in table.read().collect()) == list(range(3, 10))

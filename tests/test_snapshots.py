@@ -1257,14 +1257,23 @@ def test_full_rewrites_reset_deltas_and_schema_ops(spark, tmp_path):
 
 
 def _inferring(t: SnapshotTable) -> SnapshotTable:
-    """``t`` as seen through manifests without ``root_schemas`` (the
-    shape manifests had before the field): every read infers its schema
-    from the footers."""
+    """``t`` as seen through manifests without recorded schemas (the
+    shape manifests had before ``root_schemas`` and the deltas'
+    ``<kind>_schema`` fields): every read infers its schema from the
+    footers."""
     legacy = SnapshotTable(t.spark, t.path)
     load = legacy._load
-    legacy._load = lambda name: {
-        k: v for k, v in load(name).items() if k != "root_schemas"
-    }
+
+    def stripped(name: str) -> dict:
+        m = {k: v for k, v in load(name).items() if k != "root_schemas"}
+        if "deltas" in m:
+            m["deltas"] = [
+                {k: v for k, v in d.items() if not k.endswith("_schema")}
+                for d in m["deltas"]
+            ]
+        return m
+
+    legacy._load = stripped
     return legacy
 
 
@@ -1280,10 +1289,11 @@ def _same_read(got, want, what) -> None:
 def test_recorded_schemas_read_like_inference(spark, tmp_path):
     """Every version of a table that went through additive evolution,
     the four ALTERs, a schema rewrite, CoW and MoR merges, delta
-    compaction, adoption of a foreign file and a partition-spec
-    evolution reads with the same schema (column order included) and
-    rows whether the schema comes from the manifest or from inference;
-    so does a stats-pruned read over a subset of the roots."""
+    compaction, adoption of a foreign file, a partition-spec evolution
+    and a positional delete reads with the same schema (column order
+    included) and rows whether the schema comes from the manifest or
+    from inference; so does a stats-pruned read over a subset of the
+    roots."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1344,6 +1354,7 @@ def test_recorded_schemas_read_like_inference(spark, tmp_path):
             [(i, i % 3, f"p{i}", i, 0.5) for i in range(300, 306)], applied
         ).coalesce(1)
     )
+    t.delete_where_positional("k = 301")
 
     legacy = _inferring(t)
     for v in range(1, t.current_version() + 1):
@@ -1403,7 +1414,7 @@ def _two_root_table(spark, path) -> SnapshotTable:
 def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
     """With the schema in the manifest, a range probe is one scan job,
     not an inference job plus the scan, and a pruned CoW merge saves
-    the inference job over its affected files (6 jobs here, against 7
+    the inference job over its affected files (5 jobs here, against 6
     when the schema is inferred)."""
     t = _two_root_table(spark, str(tmp_path / "t"))
     legacy = _inferring(_two_root_table(spark, str(tmp_path / "legacy")))
@@ -1412,13 +1423,85 @@ def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
     changes = spark.createDataFrame(
         [(5, "U5", False), (7, None, True)], "k long, v string, _del boolean"
     )
-    for tbl, jobs in ((t, 6), (legacy, 7)):
+    for tbl, jobs in ((t, 5), (legacy, 6)):
         assert _jobs(
             spark,
             lambda: tbl.merge(changes, key_cols=["k"], delete_col="_del"),
         ) == jobs
         got = {r.k: r.v for r in tbl.read().collect()}
         assert got[5] == "U5" and 7 not in got and len(got) == 199
+
+
+def test_cdc_batch_cow_merge_runs_four_jobs(spark, tmp_path):
+    """A CDC micro-batch's copy-on-write merge (dedup window, pruned by
+    key range) runs 4 Spark jobs: the window's shuffle, the checkpoint
+    that materializes the change set and observes its summary, the
+    broadcast of its keys, and the write. Table and batch are built
+    from pandas frames, as a sink receives them."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from philotes_spark.streaming.lakehouse import latest_change_per_key
+
+    cols = ["id", "name", "amount", "_cdc_op", "_cdc_lsn"]
+
+    def frame(rows):
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(
+        frame([(i, f"n{i}", float(i), "INSERT", i) for i in range(2000)]),
+        stats_cols=["id"],
+    )
+    events = [(1990 + i % 20, f"u{i}", 1.5 * i, "UPDATE", 2000 + i)
+              for i in range(60)]
+    events += [(2000 + i, f"i{i}", 2.5 * i, "INSERT", 2100 + i) for i in range(30)]
+    events += [(1980 + i, None, None, "DELETE", 2200 + i) for i in range(5)]
+    changes = latest_change_per_key(frame(events), ["id"], "_cdc_lsn").withColumn(
+        "_del", F.col("_cdc_op") == "DELETE"
+    )
+    assert _jobs(
+        spark, lambda: t.merge(changes, key_cols=["id"], delete_col="_del")
+    ) == 4
+    got = {r.id: r.name for r in t.read().collect()}
+    assert len(got) == 2000 + 30 - 5
+    assert got[1995] == "u45" and got[2029] == "i29" and 1984 not in got
+
+
+def test_mor_reads_run_no_delta_inference_job(spark, tmp_path):
+    """A pending delta's files are read with the schema the delta
+    recorded from their footers: each equality delta costs a read one
+    job (its key broadcast), not three, and a positional delta one, not
+    two; deltas without a record still read by inference."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(
+        spark.createDataFrame([(i, "a") for i in range(100)], "k long, v string")
+        .coalesce(1),
+        stats_cols=["k"],
+    )
+    legacy = _inferring(t)
+    for n in (1, 2):
+        t.merge(
+            spark.createDataFrame(
+                [(n, "U", False), (50 + n, None, True)],
+                "k long, v string, _del boolean",
+            ),
+            key_cols=["k"], delete_col="_del", mode="mor",
+        )
+        assert _jobs(spark, lambda: t.read().collect()) == 1 + n
+        assert _jobs(spark, lambda: t.read_where("k", 0, 10).collect()) == 1 + n
+        # legacy: one inference job for the base files, three per delta
+        assert _jobs(spark, lambda: legacy.read().collect()) == 2 + 3 * n
+        _same_read(t.read(), legacy.read(), n)
+    p = SnapshotTable(spark, str(tmp_path / "p"))
+    p.commit(
+        spark.createDataFrame([(i, "a") for i in range(100)], "k long, v string")
+        .coalesce(1)
+    )
+    p.delete_where_positional("k < 5")
+    assert _jobs(spark, lambda: p.read().collect()) == 2
+    assert _jobs(spark, lambda: _inferring(p).read().collect()) == 4
+    assert p.read().count() == 95
 
 
 def _footer_opens(monkeypatch) -> list[str]:
