@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from philotes_spark.state import keep, release
+
 
 def _edge_signature(edges: DataFrame) -> tuple:
     """Deterministic one-action fingerprint of an edge set. Equality
@@ -93,28 +95,29 @@ def connected_components(
     "propagate" (min-label propagation, O(diameter) rounds)."""
     if algorithm not in ("star", "propagate"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    nodes = (
+    nodes = keep(
         pairs.select(F.col(src).alias("node"))
         .union(pairs.select(F.col(dst).alias("node")))
         .distinct()
-        .persist()
     )
-    edges = (
+    edges = keep(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        checkpoint=True,
     )
     if algorithm == "star":
         prev_sig = None
         for _ in range(max_iter):
             # one alternation round; each phase ends in an eager
-            # localCheckpoint to keep the plan flat
-            after_large = _large_star(
-                edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            ).localCheckpoint(eager=True)
-            edges = _small_star(after_large).localCheckpoint(eager=True)
+            # local checkpoint to keep the plan flat, and frees the
+            # phase before it once it is materialized
+            flipped = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            after_large = keep(_large_star(edges.union(flipped)), checkpoint=True)
+            release(edges)
+            edges = keep(_small_star(after_large), checkpoint=True)
+            release(after_large)
             sig = _edge_signature(edges)
             if sig == prev_sig:
                 break
@@ -128,20 +131,22 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("m").alias("component"))
         )
-        # materialize before dropping the nodes cache: `out` is lazy, so an
-        # unpersist-then-return would recompute the distinct node set at the
-        # caller's first action with the cache already gone (ADVICE r05)
-        out = (
-            nodes.join(labels, "node", "left")
-            .select("node", F.coalesce("component", "node").alias("component"))
-            .localCheckpoint(eager=True)
+        # materialize before freeing the nodes and edges: `out` is lazy,
+        # so a release-then-return would recompute the distinct node set
+        # at the caller's first action with its blocks already gone
+        # (ADVICE r05)
+        out = keep(
+            nodes.join(labels, "node", "left").select(
+                "node", F.coalesce("component", "node").alias("component")
+            ),
+            checkpoint=True,
         )
-        nodes.unpersist()
+        release(nodes)
+        release(edges)
         return out
 
-    edges = edges.persist()
-    labels = nodes.select("node", F.col("node").alias("component")).localCheckpoint(
-        eager=True
+    labels = keep(
+        nodes.select("node", F.col("node").alias("component")), checkpoint=True
     )
     prev_sum = None
     for _ in range(max_iter):
@@ -151,24 +156,25 @@ def connected_components(
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        prev = labels
+        labels = keep(
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
                 ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            checkpoint=True,
         )
+        release(prev)
         # convergence probe: labels only ever decrease, so an unchanged
         # sum means a fixpoint (1-row action; no label collect)
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    edges.unpersist()
-    nodes.unpersist()
+    release(edges)
+    release(nodes)
     return labels
 
 

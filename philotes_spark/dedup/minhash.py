@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from philotes_spark.functions.text import tokens
+from philotes_spark.state import keep
 
 _P = 4294967311  # smallest prime > 2^32
 
@@ -215,7 +216,7 @@ def lsh_candidate_pairs(
       shingle→minhash pipeline per branch.
     """
     rows = k // bands
-    sigs = sig_df.persist()
+    sigs = keep(sig_df)
     band_hashes = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda bi: F.xxhash64(F.slice("sig", bi * rows + 1, rows)),

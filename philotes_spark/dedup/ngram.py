@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from philotes_spark.functions.text import tokens
+from philotes_spark.state import keep
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -54,7 +55,7 @@ def jaccard_pairs(
     """All document pairs with shingle-set Jaccard ≥ threshold:
     (doc_a, doc_b, n_common, jaccard). doc_a < doc_b.
     """
-    sh = shingles(df, id_col, text_col, n).cache()
+    sh = keep(shingles(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
 
     posting = sh
@@ -112,7 +113,7 @@ def containment_pairs(
     Same inverted-index plan as jaccard_pairs: shingle explode →
     posting self-join (8-byte keys) → per-pair intersection counts →
     size join-back; df-cut + AQE handle hot shingles."""
-    sh = shingles(df, id_col, text_col, n).cache()
+    sh = keep(shingles(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
 
     posting = sh

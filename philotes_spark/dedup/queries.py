@@ -32,7 +32,7 @@ _TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 #   per-doc bit-vote projection dominates both);
 # - min_bytes=1MB: cross_source_overlap +6%/−48%, minhash_portable
 #   +30%/−25% (fixed exchange cost beats the win below ~1 MB of input);
-# - unconditional (cache-honest A/B, clearCache() between cold reps —
+# - unconditional (cache-honest A/B, caches cleared between cold reps —
 #   the first A/B reused each arm's own persisted shingles/signatures
 #   across reps and measured only post-cache stages): jaccard −67%/−75%,
 #   containment −68%/−78%;

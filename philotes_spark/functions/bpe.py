@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from philotes_spark.functions.text import tokens
+from philotes_spark.state import keep, release
 
 END = "</w>"  # end-of-word marker, a symbol of its own (Sennrich §3.2)
 
@@ -84,11 +85,15 @@ def train_bpe(
     is the final (word, freq, symbols array<string>) segmentation table —
     the encode-time lookup artifact. Stops early when no pair reaches
     ``min_pair_freq``."""
-    vocab = (
-        word_freqs(docs, text_col)
-        .select("word", "freq", _initial_symbols(F.col("word")).alias("symbols"))
-        .localCheckpoint(eager=True)
+    vocab = keep(
+        word_freqs(docs, text_col).select(
+            "word", "freq", _initial_symbols(F.col("word")).alias("symbols")
+        ),
+        checkpoint=True,
     )
+    # the newest checkpoint; each one is freed once the next is
+    # materialized
+    cut = vocab
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
         pairs = vocab.select(
@@ -119,8 +124,13 @@ def train_bpe(
         merges.append((a, b))
         vocab = vocab.withColumn("symbols", _merge_expr(F.col("symbols"), a, b))
         if (i + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
-    return merges, vocab.localCheckpoint(eager=True)
+            vocab = keep(vocab, checkpoint=True)
+            release(cut)
+            cut = vocab
+    if vocab is not cut:  # merges since the last checkpoint
+        vocab = keep(vocab, checkpoint=True)
+        release(cut)
+    return merges, vocab
 
 
 def encode_words(words: DataFrame, vocab: DataFrame, word_col: str = "word") -> DataFrame:

@@ -33,6 +33,15 @@ def count_shuffles(df: DataFrame) -> int:
     return len(re.findall(r"Exchange (?:hash|range|RoundRobin|Single)", plan))
 
 
+# the scan-parallelism guard's exchange and the unary chain below it down
+# to the file scan (a plan prints each node's child on the next line)
+_GUARD_EXCHANGE = re.compile(
+    r"Exchange hashpartitioning\(\w+#\d+\w*, (\d+)\), REPARTITION_BY_NUM.*"
+    r"(?:\n[ :+-]*(?:\*\(\d+\) )?(?:Project|Filter|ColumnarToRow|InputAdapter).*)*"
+    r"\n[ :+-]*(?:FileScan|Scan parquet)"
+)
+
+
 def count_data_shuffles(df: DataFrame) -> int:
     """Shuffle exchanges excluding the scan-parallelism guard's own —
     ``catalog.load_table_parallel`` inserts a fixed-count hash repartition
@@ -42,23 +51,17 @@ def count_data_shuffles(df: DataFrame) -> int:
     exchanges that grow with the data; the guard's exchange is not one of
     them.
 
-    r17 (ADVICE r16 #3): only exchanges matching a signature the guard
-    actually recorded (``catalog.GUARD_SIGNATURES``: hashpartitioning on
-    that key column with that partition count) are excluded — a
-    query-level ``repartition(n)`` (round-robin) or a repartition on any
-    other key/count is a data shuffle and trips the bound."""
-    from philotes_spark.sources.catalog import GUARD_SIGNATURES
-
+    The guard's exchange is recognised by its place in the plan: a
+    REPARTITION_BY_NUM hash exchange on one column, sized to the
+    session's ``defaultParallelism``, whose subtree down to a file scan
+    holds only projections and filters. A query-level ``repartition(n)``
+    (round-robin), a repartition to any other count, or one over a join
+    or an aggregate is a data shuffle and trips the bound (ADVICE r16
+    #3)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     plan = physical_plan(df, "simple")
-    hits = re.findall(r"Exchange (?:hash|range|RoundRobin|Single)[^\n]*", plan)
-
-    def is_guard(h: str) -> bool:
-        if "REPARTITION_BY_NUM" not in h:
-            return False
-        m = re.match(r"Exchange hashpartitioning\((\w+)#\d+\w*, (\d+)\)", h)
-        return bool(m) and (m.group(1), int(m.group(2))) in GUARD_SIGNATURES
-
-    return sum(1 for h in hits if not is_guard(h))
+    guards = sum(int(m.group(1)) == n for m in _GUARD_EXCHANGE.finditer(plan))
+    return len(re.findall(r"Exchange (?:hash|range|RoundRobin|Single)", plan)) - guards
 
 
 def count_broadcast_joins(df: DataFrame) -> int:

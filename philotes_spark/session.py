@@ -1,13 +1,14 @@
 """SparkSession factory tuned for both local testing and 100 TB-scale jobs.
 
-Every knob here is chosen for the *cluster* plan first; the local overrides
-(shuffle partitions ≈ cores) are applied only in ``local[...]`` mode.
+Every knob here is chosen for the *cluster* plan first; the one knob sized
+by the session's core count is the shuffle partition count.
 
 Scale rationale (SURVEY §4, pyspark guide):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting and
   dynamic join-strategy switches replace most hand-tuning at 100 TB.
 - ``spark.sql.shuffle.partitions`` — on a real cluster you want O(2-3× total
-  cores); AQE coalesces down, so err high. Locally we match the core count.
+  cores); AQE coalesces down, so err high. The factory sets
+  ``max(cpus, 32)``: the core count, but never fewer than 32.
 - Arrow enabled: every pandas_udf / mapInPandas boundary is Arrow-batched.
 - UTC session timezone: parquet timestamps are naive; pinning UTC keeps
   results identical to the DuckDB oracle and to any other engine.

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from philotes_spark.similarity.ivf import _centroid_lit, assign_cells
 from philotes_spark.similarity.knn import as_double, dot, l2_norm
 from philotes_spark.similarity.pq import _books_lit
+from philotes_spark.state import keep
 
 
 def train_ivfpq(
@@ -228,7 +229,7 @@ def build_ivfpq_index(
     encode_df: DataFrame | None = None,
 ) -> tuple[list[list[float]], list[list[list[float]]], DataFrame]:
     """Train + encode once: (centroids, books, persisted coded corpus).
-    Caller owns the persist. ``encode_df`` (r17): training keeps the
+    The coded corpus is kept in the session's store (``state.keep``). ``encode_df`` (r17): training keeps the
     plain scan's ``limit`` order (byte-stable codebooks); the encode is
     a row-local projection, so callers may pass a repartitioned scan for
     parallelism — see ivf.build_index."""
@@ -241,8 +242,8 @@ def build_ivfpq_index(
         books,
         id_col=id_col,
         vec_col=vec_col,
-    ).persist()
-    return centroids, books, coded
+    )
+    return centroids, books, keep(coded)
 
 
 def ivfpq_topk(

@@ -39,6 +39,7 @@ from philotes_spark.similarity.knn import (
     similarity_pairs,
 )
 from philotes_spark.sources.catalog import load_table, load_table_parallel
+from philotes_spark.state import keep, memo, release
 
 QUERY_IDS = [0, 1, 2, 3, 4]
 
@@ -127,7 +128,7 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r16 guarded scan repartition (catalog.load_table_parallel): at
     fixture scale the one-row-group embeddings scan fed the block join
     through a BROADCAST of the replicated side, so the entire O(n²)
-    scoring ran in the single probe-scan task. A/B (clearCache between
+    scoring ran in the single probe-scan task. A/B (caches cleared between
     cold reps): −91% at sf0.1 (10.90 → 0.98 s); same family
     dedup_embedding_cosine −89%, connected_components −76%,
     threshold_sweep below. Per-pair dots are computed within one joined
@@ -191,18 +192,32 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-# IVF index cache: one (centroids, persisted cells) per corpus dir —
-# index construction is the amortized half of IVF serving; queries reuse it.
-_IVF_INDEX: dict[str, tuple[list[list[float]], DataFrame]] = {}
+def _ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """(centroids, kept cells) of ``sf_dir``'s corpus, built once per
+    session and corpus: index construction is the amortized half of IVF
+    serving, and every IVF query reuses it."""
+    from philotes_spark.similarity.ivf import build_index
 
-
-def _drop_index_memos() -> None:
-    """registry.invalidate_query_cache hook: a genuine cold run must
-    rebuild the ANN indexes from the parquet inputs (the CacheManager
-    clear alone would leave stale un-persisted DataFrames in the memos,
-    silently re-running the encode on every subsequent action)."""
-    for memo in (_IVF_INDEX, _PQ_INDEX, _IVFPQ_INDEX):
-        memo.clear()
+    # training samples the PLAIN scan (byte-stable centroids); the
+    # encode pass is row-local and takes the scan-parallelism guard
+    # (r17, VERDICT r16 #5 — the single-row-group fixture otherwise
+    # runs the whole interpreted-lambda assignment on one task)
+    # min_bytes=4MB, re-measured for the r17 Arrow assign
+    # (assign_cells_arrow cut per-row cost ~50x, moving the guard's
+    # crossover up): interleaved min-of-4 A/B — guard +23% at
+    # 0.8 MB/sf0.1 (0.886 vs 1.093 s), +14% at 2.4 MB/sf0.3,
+    # -7% at 5.2 MB/sf1 (1.130 -> 1.050 s)
+    return memo(
+        spark,
+        ("ivf_index", sf_dir),
+        lambda: build_index(
+            emb,
+            n_centroids=16,
+            encode_df=load_table_parallel(
+                spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
+            ),
+        ),
+    )
 
 
 @query("sim_ivf_topk")  # rows-only: centroid index is engine-local
@@ -211,28 +226,11 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-pruned ANN path (train on sample, probe nearest cells).
     The index is built once per corpus and cached; each call pays only
     probe + equi-join + re-rank, the steady-state serving cost."""
-    from philotes_spark.similarity.ivf import build_index, ivf_topk
+    from philotes_spark.similarity.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_INDEX:
-        # training samples the PLAIN scan (byte-stable centroids); the
-        # encode pass is row-local and takes the scan-parallelism guard
-        # (r17, VERDICT r16 #5 — the single-row-group fixture otherwise
-        # runs the whole interpreted-lambda assignment on one task)
-        # min_bytes=4MB, re-measured for the r17 Arrow assign
-        # (assign_cells_arrow cut per-row cost ~50x, moving the guard's
-        # crossover up): interleaved min-of-4 A/B — guard +23% at
-        # 0.8 MB/sf0.1 (0.886 vs 1.093 s), +14% at 2.4 MB/sf0.3,
-        # -7% at 5.2 MB/sf1 (1.130 -> 1.050 s)
-        _IVF_INDEX[sf_dir] = build_index(
-            emb,
-            n_centroids=16,
-            encode_df=load_table_parallel(
-                spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
-            ),
-        )
     return ivf_topk(
-        emb, QUERY_IDS, k=10, n_probe=6, index=_IVF_INDEX[sf_dir]
+        emb, QUERY_IDS, k=10, n_probe=6, index=_ivf_index(spark, sf_dir, emb)
     ).coalesce(1).orderBy("query_id", "rank")
 
 
@@ -465,17 +463,6 @@ def sim_label_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_INDEX: dict[str, tuple[list, DataFrame]] = {}
-
-# IVF-PQ index cache: (centroids, codebooks, persisted coded corpus) per
-# corpus dir — same amortization as _IVF_INDEX/_PQ_INDEX.
-_IVFPQ_INDEX: dict[str, tuple[list, list, DataFrame]] = {}
-
-from philotes_spark.registry import register_invalidator  # noqa: E402
-
-register_invalidator(_drop_index_memos)
-
-
 @query("sim_pq_topk")  # rows-only: per-subspace codebooks are engine-local
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-10 with exact re-rank — the
@@ -489,7 +476,8 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from philotes_spark.similarity.pq import encode_pq, pq_topk, train_pq_codebooks
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _PQ_INDEX:
+
+    def build():
         books = train_pq_codebooks(emb, m=16, ks=16)
         # codebooks train on the plain scan; the encode projection takes
         # the scan-parallelism guard (r17, see build_index)
@@ -499,8 +487,9 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_par = load_table_parallel(
             spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
         )
-        _PQ_INDEX[sf_dir] = (books, encode_pq(emb_par, books).persist())
-    books, codes = _PQ_INDEX[sf_dir]
+        return books, keep(encode_pq(emb_par, books))
+
+    books, codes = memo(spark, ("pq_index", sf_dir), build)
     return pq_topk(
         emb, QUERY_IDS, books, k=10, rerank=100, codes=codes
     ).coalesce(1).orderBy("query_id", "rank")
@@ -577,19 +566,22 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from philotes_spark.similarity.ivfpq import build_ivfpq_index, ivfpq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVFPQ_INDEX:
-        # plain-scan training, guarded-scan encode (r17, see build_index)
-        # min_bytes=4MB: interleaved min-of-4 A/B (r17) — +24% at
-        # 0.8 MB/sf0.1 (1.044 -> 1.296 s), -4% at 5.2 MB/sf1
-        # (2.326 -> 2.235 s): the mapInArrow encode amortizes Python
-        # worker startup only above a few MB of corpus
-        _IVFPQ_INDEX[sf_dir] = build_ivfpq_index(
+    # plain-scan training, guarded-scan encode (r17, see build_index)
+    # min_bytes=4MB: interleaved min-of-4 A/B (r17) — +24% at
+    # 0.8 MB/sf0.1 (1.044 -> 1.296 s), -4% at 5.2 MB/sf1
+    # (2.326 -> 2.235 s): the mapInArrow encode amortizes Python
+    # worker startup only above a few MB of corpus
+    index = memo(
+        spark,
+        ("ivfpq_index", sf_dir),
+        lambda: build_ivfpq_index(
             emb,
             n_centroids=16,
             encode_df=load_table_parallel(
                 spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
             ),
-        )
+        ),
+    )
     return ivfpq_topk(
         emb,
         QUERY_IDS,
@@ -597,7 +589,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         n_probe=4,
         rerank=50,
-        index=_IVFPQ_INDEX[sf_dir],
+        index=index,
     ).coalesce(1).orderBy("query_id", "rank")
 
 
@@ -677,32 +669,15 @@ def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the exact filtered ground truth is gated in
     test_similarity_recall.py; the exact twin (sim_filtered_topk) is
     oracle-backed."""
-    from philotes_spark.similarity.ivf import build_index, ivf_topk
+    from philotes_spark.similarity.ivf import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_INDEX:
-        # training samples the PLAIN scan (byte-stable centroids); the
-        # encode pass is row-local and takes the scan-parallelism guard
-        # (r17, VERDICT r16 #5 — the single-row-group fixture otherwise
-        # runs the whole interpreted-lambda assignment on one task)
-        # min_bytes=4MB, re-measured for the r17 Arrow assign
-        # (assign_cells_arrow cut per-row cost ~50x, moving the guard's
-        # crossover up): interleaved min-of-4 A/B — guard +23% at
-        # 0.8 MB/sf0.1 (0.886 vs 1.093 s), +14% at 2.4 MB/sf0.3,
-        # -7% at 5.2 MB/sf1 (1.130 -> 1.050 s)
-        _IVF_INDEX[sf_dir] = build_index(
-            emb,
-            n_centroids=16,
-            encode_df=load_table_parallel(
-                spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
-            ),
-        )
     return ivf_topk(
         emb,
         QUERY_IDS,
         k=10,
         n_probe=8,
-        index=_IVF_INDEX[sf_dir],
+        index=_ivf_index(spark, sf_dir, emb),
         corpus=emb.filter(F.col("label") == 1),
     ).coalesce(1).orderBy("query_id", "rank")
 
@@ -1533,7 +1508,7 @@ def sim_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 16x64-product cell expression into every one of the 128
     # residual-encode lambdas below (the r12 interpreted-HOF pathology
     # squared) — sf0.1 measured 124 s -> ~seconds with the cut
-    with_cell = with_cell.localCheckpoint()
+    with_cell = keep(with_cell, checkpoint=True)
     rbooks_lit = F.array(
         *[
             F.struct(
@@ -1612,11 +1587,11 @@ def sim_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # second lineage cut: codes feeds t_n (16-deep element_at chains)
     # and the neighbor/query fan-outs below
-    encoded = (
-        with_cell.withColumn("codes", codes)
-        .withColumn("t_n", t_n)
-        .localCheckpoint()
+    encoded = keep(
+        with_cell.withColumn("codes", codes).withColumn("t_n", t_n),
+        checkpoint=True,
     )
+    release(with_cell)  # the second cut no longer reads the first
     neighbors = encoded.select(
         F.col("id").alias("neighbor_id"),
         F.col("v").alias("cv2"),

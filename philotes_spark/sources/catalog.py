@@ -150,13 +150,6 @@ def _parquet_row_groups(path: str) -> int:
     return total
 
 
-# every (key column, partition count) the scan-parallelism guard has
-# actually applied this session — plans/audit.py's count_data_shuffles
-# subtracts ONLY exchanges matching one of these signatures, so any other
-# explicit repartition still counts as a data shuffle (ADVICE r16 #3)
-GUARD_SIGNATURES: set[tuple[str, int]] = set()
-
-
 def load_table_parallel(
     spark: SparkSession, sf_dir: str, name: str, key: str, min_bytes: int = 0
 ) -> DataFrame:
@@ -217,7 +210,6 @@ def load_table_parallel(
             return df
     from pyspark.sql import functions as F
 
-    GUARD_SIGNATURES.add((key, n))
     return df.repartition(n, F.col(key))
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from philotes_spark.registry import query
 from philotes_spark.sources.catalog import load_table, show_create_table
 from philotes_spark.sources.snapshots import SnapshotTable
+from philotes_spark.state import keep
 
 
 @query(
@@ -39,7 +40,7 @@ def snapshot_version_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.commit(ev.filter(F.col("event_id") <= 500))
         tbl.commit(ev.filter(F.col("event_id") > 500))
         assert tbl.current_version() == 2
-        return tbl.read(version=1).localCheckpoint()
+        return keep(tbl.read(version=1), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -64,10 +65,9 @@ def snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = SnapshotTable(spark, scratch)
         tbl.commit(ev.filter(F.col("event_id") <= 500))
         tbl.commit(ev.filter(F.col("event_id") > 500))
-        return (
-            tbl.snapshots()
-            .select("version", "operation", "added_rows")
-            .localCheckpoint()
+        return keep(
+            tbl.snapshots().select("version", "operation", "added_rows"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -91,10 +91,10 @@ def snapshot_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         tbl = SnapshotTable(spark, scratch)
         tbl.commit(ev.coalesce(1), partition_by=["event_type"])
-        return (
+        return keep(
             tbl.partitions()
-            .select("partition", F.col("file_count").cast("int").alias("file_count"))
-            .localCheckpoint()
+            .select("partition", F.col("file_count").cast("int").alias("file_count")),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -134,7 +134,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value", F.round(F.col("value") * 2, 2)
         )
         tbl.merge(changes, key_cols=["event_id"])
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -163,7 +163,7 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.commit(ev.filter(F.col("event_id") <= 500))
         tbl.commit(ev.filter((F.col("event_id") > 500) & (F.col("event_id") <= 800)))
         tbl.commit(ev.filter(F.col("event_id") > 800))
-        return tbl.read_incremental(from_version=1).localCheckpoint()
+        return keep(tbl.read_incremental(from_version=1), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -214,7 +214,7 @@ def snapshot_changelog_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             key_cols=["event_id"],
             delete_col="_del",
         )
-        return tbl.read_changes(1, 2, key_cols=["event_id"]).localCheckpoint()
+        return keep(tbl.read_changes(1, 2, key_cols=["event_id"]), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -298,7 +298,7 @@ def snapshot_clustered_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter((F.col("user_id") >= lo) & (F.col("user_id") <= hi))
             .select("event_id", "user_id", "value")
         )
-        return out.localCheckpoint()
+        return keep(out, checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -336,7 +336,7 @@ def snapshot_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             """,
             {"ev": tbl},
         )
-        return out.localCheckpoint()
+        return keep(out, checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -383,7 +383,7 @@ def snapshot_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="mor",
         )
         assert tbl._resolve()["files"] == base_files, "MoR must not rewrite base"
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -414,7 +414,7 @@ def snapshot_rollback_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.merge(bad, key_cols=["event_id"], delete_col="_del", mode="mor")
         tbl.rollback(to_version=1)
         assert tbl.current_version() == 3
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -450,7 +450,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         want = ev.filter(F.col("event_id") <= 450).count()
         assert br.read().count() == want, "audit failed"
         tbl.fast_forward("audit")
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -495,7 +495,7 @@ def snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter((F.col("value") >= 100) & (F.col("value") <= 300))
             .select("event_id", "user_id", "value")
         )
-        return out.localCheckpoint()
+        return keep(out, checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -531,7 +531,7 @@ def snapshot_overwrite_partitions(spark: SparkSession, sf_dir: str) -> DataFrame
             "value", F.round(F.col("value") + 1000, 2)
         )
         tbl.overwrite_partitions(relanded)
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -564,7 +564,7 @@ def snapshot_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         br = tbl.create_branch("dev", from_version=1)
         br.commit(ev.filter(F.col("event_id").between(201, 300)))
         tbl.commit(ev.filter(F.col("event_id").between(201, 400)))
-        return tbl.refs().orderBy("ref_name").localCheckpoint()
+        return keep(tbl.refs().orderBy("ref_name"), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -600,7 +600,7 @@ def snapshot_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type = 'click'", {"value": "value + 1000"},
             key_cols=["event_id"],
         )
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -665,14 +665,14 @@ def snapshot_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
             snapshot_tables={"ev": tbl},
             dml_keys={"ev": ["event_id"]},
         ).collect()
-        return (
+        return keep(
             tbl.read()
             .select(
                 "event_id",
                 "event_type",
                 F.round("value", 4).alias("value"),
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
     finally:
         spark.catalog.dropTempView(src_view)
@@ -714,14 +714,14 @@ def snapshot_update_unfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
             snapshot_tables={"ev": tbl},
             dml_keys={"ev": ["event_id"]},
         ).collect()
-        return (
+        return keep(
             tbl.read()
             .select(
                 "event_id",
                 "event_type",
                 F.round("value", 4).alias("value"),
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -766,10 +766,10 @@ def snapshot_schema_history(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value2", F.col("value") * 3
             )
         )
-        return (
+        return keep(
             tbl.schema_history()
-            .select("version", "schema_version", "n_columns", "columns")
-            .localCheckpoint()
+            .select("version", "schema_version", "n_columns", "columns"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -800,12 +800,12 @@ def snapshot_positional_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.commit(ev.filter(F.col("event_id") <= 400))
         tbl.delete_where_positional("event_type = 'error'")
         tbl.delete_where_positional("value < 10")
-        return (
+        return keep(
             tbl.read()
             .select(
                 "event_id", "event_type", F.round("value", 4).alias("value")
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -836,12 +836,15 @@ def snapshot_meta_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = SnapshotTable(spark, scratch)
         tbl.commit(ev.filter(F.col("event_id") <= 500))
         tbl.commit(ev.filter(F.col("event_id") > 500))
-        return sql_frontend.sql(
-            spark,
-            'SELECT version, operation, added_rows FROM "ev$snapshots" '
-            "ORDER BY version",
-            snapshot_tables={"ev": tbl},
-        ).localCheckpoint()
+        return keep(
+            sql_frontend.sql(
+                spark,
+                'SELECT version, operation, added_rows FROM "ev$snapshots" '
+                "ORDER BY version",
+                snapshot_tables={"ev": tbl},
+            ),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -887,9 +890,7 @@ def snapshot_alter_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sql_stmt(spark, "ALTER TABLE t RENAME COLUMN value TO amount", tabs)
         sql_stmt(spark, "ALTER TABLE t DROP COLUMN user_id", tabs)
-        return (
-            tbl.read().select("event_id", "amount", "source").localCheckpoint()
-        )
+        return keep(tbl.read().select("event_id", "amount", "source"), checkpoint=True)
     finally:
         spark.catalog.dropTempView(view)
         shutil.rmtree(scratch, ignore_errors=True)
@@ -931,7 +932,7 @@ def snapshot_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"FROM {view} WHERE event_type = 'click'",
             {"t": tbl},
         )
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         spark.catalog.dropTempView(view)
         shutil.rmtree(scratch, ignore_errors=True)
@@ -978,15 +979,15 @@ def snapshot_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
             table_root=scratch,
         )
         assert tabs["ev_agg"].current_version() == 2
-        return (
+        return keep(
             tabs["ev_agg"]
             .read()
             .groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
                 F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
     finally:
         spark.catalog.dropTempView(view)
@@ -1032,7 +1033,7 @@ def snapshot_wap_statements(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0].n
         assert staged > tbl.read().count()
         sql_stmt(spark, "CALL fast_forward('w', 'wip')", tabs)
-        return tbl.read().localCheckpoint()
+        return keep(tbl.read(), checkpoint=True)
     finally:
         spark.catalog.dropTempView(view)
         shutil.rmtree(scratch, ignore_errors=True)
@@ -1094,9 +1095,10 @@ def snapshot_widen_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert dict(got.dtypes) == {
             "event_id": "bigint", "cents": "bigint", "vf": "double"
         }
-        return got.select(
-            "event_id", "cents", F.round("vf", 4).alias("vf")
-        ).localCheckpoint()
+        return keep(
+            got.select("event_id", "cents", F.round("vf", 4).alias("vf")),
+            checkpoint=True,
+        )
     finally:
         spark.catalog.dropTempView(view)
         shutil.rmtree(scratch, ignore_errors=True)
@@ -1153,9 +1155,12 @@ def snapshot_name_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             rest,
             name_mapping=name_mapping_from_ops(rest, m.get("schema_ops", [])),
         )
-        return external.select(
-            "event_id", "user_id", F.round("reading", 4).alias("reading")
-        ).localCheckpoint()
+        return keep(
+            external.select(
+                "event_id", "user_id", F.round("reading", 4).alias("reading")
+            ),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1206,9 +1211,10 @@ def snapshot_rewrite_late_appends(spark: SparkSession, sf_dir: str) -> DataFrame
         assert m.get("deltas"), "delta must remain pending"
         got = tbl.read()
         assert got.count() == before  # the rewrite preserved every row
-        return got.select(
-            "event_id", "user_id", F.round("value", 4).alias("value")
-        ).localCheckpoint()
+        return keep(
+            got.select("event_id", "user_id", F.round("value", 4).alias("value")),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1273,9 +1279,10 @@ def snapshot_delete_manifests_read(spark: SparkSession, sf_dir: str) -> DataFram
         rest = schema_to_rest(tbl.read().schema)
         ml = write_manifests_for_version(tbl, m["version"], rest_schema=rest)
         external = read_table_via_manifests(spark, ml, rest)
-        return external.select(
-            "event_id", "user_id", F.round("value", 4).alias("value")
-        ).localCheckpoint()
+        return keep(
+            external.select("event_id", "user_id", F.round("value", 4).alias("value")),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1347,9 +1354,12 @@ def snapshot_evolution_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             rest,
             name_mapping=name_mapping_from_ops(rest, m.get("schema_ops", [])),
         )
-        return external.select(
-            "event_id", "user_id", F.round("reading", 4).alias("reading")
-        ).localCheckpoint()
+        return keep(
+            external.select(
+                "event_id", "user_id", F.round("reading", 4).alias("reading")
+            ),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1409,9 +1419,10 @@ def snapshot_expired_chain_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         rest = schema_to_rest(tbl.read().schema)
         ml = write_manifests_for_version(tbl, m["version"], rest_schema=rest)
         external = read_table_via_manifests(spark, ml, rest)
-        return external.select(
-            "event_id", "user_id", F.round("value", 4).alias("value")
-        ).localCheckpoint()
+        return keep(
+            external.select("event_id", "user_id", F.round("value", 4).alias("value")),
+            checkpoint=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1468,9 +1479,10 @@ def snapshot_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataF
         specs = {r.spec_id for r in tbl.partition_specs().collect()
                  if r.live_file_count > 0}
         assert len(specs) >= 2, specs
-        return tbl.read().select(
-            "event_id", "event_type", "value"
-        ).localCheckpoint()
+        return keep(
+            tbl.read().select("event_id", "event_type", "value"),
+            checkpoint=True,
+        )
     finally:
         spark.catalog.dropTempView(view)
         shutil.rmtree(scratch, ignore_errors=True)
@@ -1544,10 +1556,9 @@ def snapshot_partition_transforms_read(
         )
         scanned, total = tbl.pruned_file_count("ts", lo=cutoff)
         assert scanned < total, (scanned, total)  # day partitions pruned
-        return (
-            tbl.read_where("ts", lo=cutoff)
-            .select("event_id", "event_type", "value")
-            .localCheckpoint()
+        return keep(
+            tbl.read_where("ts", lo=cutoff).select("event_id", "event_type", "value"),
+            checkpoint=True,
         )
     finally:
         spark.catalog.dropTempView(view)
@@ -1613,11 +1624,11 @@ def snapshot_write_order_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         kept, total = tbl.pruned_file_count("user_id", lo=lo, hi=hi)
         assert kept < total, (kept, total)  # reclustered history prunes
-        return (
+        return keep(
             tbl.read_where("user_id", lo=lo, hi=hi)
             .filter((F.col("user_id") >= lo) & (F.col("user_id") <= hi))
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+            .select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         spark.catalog.dropTempView(view)
@@ -1692,11 +1703,11 @@ def snapshot_partial_rewrite_read(spark: SparkSession, sf_dir: str) -> DataFrame
             if os.path.relpath(f, tbl.data_dir).split(os.sep)[0] not in done
         ]
         assert pending, "table must still be PARTIALLY reclustered"
-        return (
+        return keep(
             tbl.read_where("user_id", lo=lo, hi=hi)
             .filter((F.col("user_id") >= lo) & (F.col("user_id") <= hi))
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+            .select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -1754,9 +1765,7 @@ def snapshot_manifests_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         assert len(rows) == 3 and all(r.n_files == 1 for r in rows), rows
-        return spark.createDataFrame(
-            rows, out.schema
-        ).localCheckpoint()
+        return keep(spark.createDataFrame(rows, out.schema), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1822,11 +1831,11 @@ def snapshot_tighten_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             assert h1 <= l2, hulls  # value-disjoint up to shared keys
         kept, total = tbl.pruned_file_count("user_id", lo=lo, hi=hi)
         assert kept < total, (kept, total)
-        return (
+        return keep(
             tbl.read_where("user_id", lo=lo, hi=hi)
             .filter((F.col("user_id") >= lo) & (F.col("user_id") <= hi))
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+            .select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -1888,7 +1897,7 @@ def snapshot_entries_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the stats-pruned CoW left slice 2 carried by reference —
         # EXISTING, attributed to its adding snapshot, never rewritten
         assert (rows[0].status, rows[0].snapshot_id) == (0, 2), rows
-        return spark.createDataFrame(rows, out.schema).localCheckpoint()
+        return keep(spark.createDataFrame(rows, out.schema), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -1946,10 +1955,9 @@ def snapshot_cherrypick_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         sql_stmt(spark, "CALL cherrypick_snapshot('t', 'wip')", tabs)
         m = tbl._load(f"v{tbl.current_version():08d}.json")
         assert m["operation"] == "cherry-pick", m["operation"]
-        return (
-            tbl.read()
-            .select("event_id", "event_type", "value")
-            .localCheckpoint()
+        return keep(
+            tbl.read().select("event_id", "event_type", "value"),
+            checkpoint=True,
         )
     finally:
         spark.catalog.dropTempView(view)
@@ -1991,11 +1999,11 @@ def snapshot_ts_prune_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.commit(ev.repartition(8), sort_by=["ts"])
         kept, total = tbl.pruned_file_count("ts", lo=lo, hi=hi)
         assert kept < total, (kept, total)  # ts stats actually prune
-        return (
+        return keep(
             tbl.read_where("ts", lo=lo, hi=hi)
             .filter((F.col("ts") >= lo) & (F.col("ts") <= hi))
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+            .select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -2061,10 +2069,9 @@ def snapshot_date_prune_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), m["file_stats"]
         kept, total = tbl.pruned_file_count("day_ts", hi=hi_date)
         assert kept < total, (kept, total)  # later-day files prune
-        return (
-            tbl.read_where("day_ts", hi=hi_date)
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+        return keep(
+            tbl.read_where("day_ts", hi=hi_date).select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -2116,11 +2123,7 @@ def snapshot_rewrite_manifests_read(spark: SparkSession, sf_dir: str) -> DataFra
         assert m.get("provenance"), "fold must store the checkpoint"
         assert m["added_files"] == 0  # metadata-only
         tbl.commit(ev.filter(F.col("event_id") > 3 * n // 4).repartition(2))
-        return (
-            tbl.read()
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
-        )
+        return keep(tbl.read().select("event_id", "user_id", "value"), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -2175,11 +2178,7 @@ def snapshot_add_files_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", lo=int(n * 0.9), hi=int(n)
         )
         assert kept < total, (kept, total)
-        return (
-            tbl.read()
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
-        )
+        return keep(tbl.read().select("event_id", "user_id", "value"), checkpoint=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
         shutil.rmtree(foreign, ignore_errors=True)
@@ -2237,11 +2236,11 @@ def snapshot_external_ts_prune_read(
                 continue  # provably disjoint: the external plan skips it
             surviving.append(e["file_path"])
         assert 0 < len(surviving) < len(data), (len(surviving), len(data))
-        return (
+        return keep(
             spark.read.parquet(*surviving)
             .filter((F.col("ts") >= lo) & (F.col("ts") <= hi))
-            .select("event_id", "user_id", "value")
-            .localCheckpoint()
+            .select("event_id", "user_id", "value"),
+            checkpoint=True,
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -53,6 +53,7 @@ from philotes_spark.sources.transforms import (
     transform_value,
     with_partition_cols,
 )
+from philotes_spark.state import keep, release
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
@@ -81,6 +82,23 @@ def _upsert_count(delete_col: str | None):
     return n.alias("n_up")
 
 
+def _change_keys(changes: DataFrame, key_cols: list[str], n: int) -> DataFrame:
+    """The key side of a merge's anti-join, broadcast when its ``n``
+    observed rows at the key columns' default width fit the session's
+    ``autoBroadcastJoinThreshold`` (a negative threshold keeps the
+    planner's choice). The checkpoint's own size estimate cannot decide
+    it: a change set built from a Python list estimates ~10^19 bytes and
+    would plan a shuffle join. No distinct: a left-anti join keeps the
+    same rows whether or not the keys repeat, and the distinct costs a
+    shuffle."""
+    keys = changes.select(*key_cols)
+    jss = changes.sparkSession._jsparkSession
+    limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
+    if 0 <= n * keys._jdf.schema().defaultSize() <= limit:
+        return F.broadcast(keys)
+    return keys
+
+
 @contextlib.contextmanager
 def _change_set_once(changes: DataFrame, *summary):
     """Evaluate a copy-on-write merge's change set ONCE. Yields
@@ -102,14 +120,11 @@ def _change_set_once(changes: DataFrame, *summary):
     from pyspark.sql import Observation
 
     obs = Observation()
-    rows = changes.observe(obs, *summary).localCheckpoint(eager=True)
-    rdd_id = rows._jdf.logicalPlan().rdd().id()
+    rows = keep(changes.observe(obs, *summary), checkpoint=True)
     try:
         yield rows, obs.get
     finally:
-        # RDD.unpersist logs a WARN on every call for a locally
-        # checkpointed RDD; unpersistRDD frees the same blocks quietly
-        rows.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
+        release(rows)
 
 
 def _drop_derived(df: DataFrame, part_cols: list[str]) -> DataFrame:
@@ -397,18 +412,18 @@ def _footer_facts(f: str, cols: list[str]) -> dict | None:
     return {"size": size, "rows": md.num_rows, "stats": per, "schema": schema}
 
 
-def _staged_nonempty(staged: str) -> tuple[dict[str, int], dict | None]:
-    """The non-empty files of one staged write with their row counts, and
-    the Spark schema their footers agree on (None when they carry none or
-    disagree), from one footer read per file and no ``df.count()``. Empty
-    part files are left out: each would become a manifest entry and a
-    per-read scan task."""
+def _staged_nonempty(staged: str, cols=()) -> tuple[dict[str, dict], dict | None]:
+    """The non-empty files of one staged write with their footer facts
+    (stats under ``cols``), and the Spark schema their footers agree on
+    (None when they carry none or disagree), from one footer read per
+    file and no ``df.count()``. Empty part files are left out: each would
+    become a manifest entry and a per-read scan task."""
     files = _staged_parquet_files(staged)
-    facts = _footer_map(files, lambda f: _footer_facts(f, []))
-    rows = {f: x["rows"] for f, x in zip(files, facts) if x["rows"]}
-    schemas = [x["schema"] for x in facts if x["rows"]]
+    facts = _footer_map(files, lambda f: _footer_facts(f, cols))
+    kept = {f: x for f, x in zip(files, facts) if x["rows"]}
+    schemas = [x["schema"] for x in kept.values()]
     same = bool(schemas) and all(s == schemas[0] for s in schemas)
-    return rows, schemas[0] if same else None
+    return kept, schemas[0] if same else None
 
 
 def _merge_schemas(left: dict, right: dict) -> dict | None:
@@ -949,7 +964,8 @@ class SnapshotTable:
 
     def _write_manifest(self, base: dict, *, operation: str, files,
                         added_files: int, added_rows: int | None = None,
-                        parent: int | None = None, **overrides) -> int:
+                        parent: int | None = None, footers: dict | None = None,
+                        **overrides) -> int:
         """Commit ``files`` as version ``parent + 1`` — the one place that
         decides what a commit carries forward. As in Iceberg, a commit is
         its base's metadata plus this commit's changes.
@@ -963,7 +979,9 @@ class SnapshotTable:
         files an append-shaped commit adds.
 
         Each file new to this commit has its footer read exactly once,
-        for its size, rows, stats and schema together.
+        for its size, rows, stats and schema together; ``footers`` are
+        facts the caller already read (``_footer_facts`` under the
+        commit's ``stats_cols``), by file, and are not read again.
 
         The carry-forward rule, field by field:
 
@@ -1010,8 +1028,10 @@ class SnapshotTable:
         born = [f for f in files if f not in listed]
         fresh = sorted({f for f in files if f not in parent_meta} | set(born))
         cols = carried["stats_cols"]
-        facts = dict(
-            zip(fresh, _footer_map(fresh, lambda f: _footer_facts(f, cols)))
+        facts = dict(footers or {})
+        unread = [f for f in fresh if f not in facts]
+        facts.update(
+            zip(unread, _footer_map(unread, lambda f: _footer_facts(f, cols)))
         )
         if added_rows is None:
             added_rows = sum(facts[f]["rows"] for f in born if facts[f])
@@ -1658,11 +1678,12 @@ class SnapshotTable:
         the manifest as full rewrite). The change set is evaluated once
         (:func:`_change_set_once`): one locally checkpointed pass gives
         both its rows and, observed on the way, its row count (0 ⇒
-        no-op), upsert count (the manifest's ``added_rows``) and leading
-        key's min/max (file pruning). The upserts and the anti-join keys
-        read that pass, so the change set's lineage runs once per merge.
-        A merge that loses an executor holding the checkpoint fails and
-        commits nothing.
+        no-op; it also decides whether the anti-join broadcasts the
+        keys, :func:`_change_keys`), upsert count (the manifest's
+        ``added_rows``) and leading key's min/max (file pruning). The
+        upserts and the anti-join keys read that pass, so the change
+        set's lineage runs once per merge. A merge that loses an executor
+        holding the checkpoint fails and commits nothing.
 
         ``mode='mor'`` is the merge-on-READ twin (Iceberg v2 equality
         deletes): the change set is written as a DELTA — an equality-
@@ -1712,9 +1733,7 @@ class SnapshotTable:
             upserts = changes
             if delete_col is not None:
                 upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-            # no distinct: a left-anti join keeps the same rows whether or
-            # not the keys repeat, and the distinct costs a shuffle
-            change_keys = changes.select(*key_cols)
+            change_keys = _change_keys(changes, key_cols, summary["n"])
 
             affected, untouched = list(m["files"]), []
             if prune and summary["lo"] is not None:
@@ -1807,7 +1826,7 @@ class SnapshotTable:
             operation="merge-mor",
             files=m["files"],
             added_files=len(ups),
-            added_rows=sum(ups.values()),
+            added_rows=sum(x["rows"] for x in ups.values()),
             deltas=list(m.get("deltas", [])) + [delta],
         )
 
@@ -2042,13 +2061,14 @@ class SnapshotTable:
         staged = self._stage(
             _partitioned_writer(self._recluster(base, m), part_cols)
         )
-        new_files = list(_staged_nonempty(staged)[0])
+        new, _ = _staged_nonempty(staged, m.get("stats_cols") or [])
         return self._write_manifest(
             m,
             operation="rewrite-late-appends",
-            files=[f for f in m["files"] if f not in late] + new_files,
-            added_files=len(new_files),
+            files=[f for f in m["files"] if f not in late] + list(new),
+            added_files=len(new),
             added_rows=0,  # logical rows unchanged — a rewrite
+            footers=new,
         )
 
     def _apply_deltas(self, base: DataFrame, m: dict) -> DataFrame:
@@ -3341,8 +3361,9 @@ class SnapshotTable:
         an untouched partition carries forward by reference. The change
         set is evaluated once, as in :meth:`merge`: the touched
         partitions (a set bounded by the partition grain, days/types,
-        never by rows) and the upsert count are observed on the pass
-        that materializes its rows."""
+        never by rows), the row count (which sizes the anti-join's key
+        side) and the upsert count are observed on the pass that
+        materializes its rows."""
         part_cols = m["partition_by"]
         sources = [pf.source for pf in parse_spec(part_cols)]
         missing = [c for c in sources if c not in changes.columns]
@@ -3362,11 +3383,12 @@ class SnapshotTable:
         # specs the change rows get the same derived ts_day/id_bucket
         # values the writer lands in paths, so classification agrees.
         # Observed on the change set's one pass (see merge()): the
-        # touched partitions and the upsert count
+        # touched partitions, the row count and the upsert count
         ch, pnames = with_partition_cols(changes, part_cols)
         with _change_set_once(
             ch,
             F.collect_set(F.struct(*pnames)).alias("parts"),
+            F.count(F.lit(1)).alias("n"),
             _upsert_count(delete_col),
         ) as (ch, summary):
             if not summary["parts"]:
@@ -3376,8 +3398,7 @@ class SnapshotTable:
             upserts = changes
             if delete_col is not None:
                 upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-            # no distinct: the anti-join keeps the same rows either way
-            change_keys = changes.select(*key_cols)
+            change_keys = _change_keys(changes, key_cols, summary["n"])
 
             affected, untouched = [], []
             for f in m["files"]:

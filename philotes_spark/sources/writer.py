@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from philotes_spark.state import keep, release
+
 PARTITION_COL = "_cdc_date"
 
 
@@ -57,7 +59,7 @@ def write_batch_per_table(
     The batch is cached once, then filtered per table (SURVEY §7.4 risk 1:
     correct-but-serial loop; each write is itself parallel). Returns the
     list of table paths written."""
-    df = df.cache()
+    df = keep(df)
     try:
         targets = [
             (r[0], r[1])
@@ -73,7 +75,7 @@ def write_batch_per_table(
             paths.append(path)
         return paths
     finally:
-        df.unpersist()
+        release(df)
 
 
 def read_lake_table(spark: SparkSession, table_path: str) -> DataFrame:

@@ -83,9 +83,9 @@ def test_guard_results_row_identical(spark, sf_dir):
 
 def test_explicit_repartition_counts_as_data_shuffle(spark, sf_dir):
     """r17 (ADVICE r16 #3 / VERDICT #6): count_data_shuffles excludes
-    ONLY the guard's recorded (key, count) signature — a query-level
+    ONLY an exchange shaped like the guard's — a query-level
     ``repartition(n)`` (round-robin) or a repartition on a different
-    key/count is a data shuffle and must trip the bound, so the
+    count is a data shuffle and must trip the bound, so the
     zero-shuffle audits still catch an accidental corpus-sized shuffle
     added deeper in a plan."""
     n = spark.sparkContext.defaultParallelism
@@ -99,6 +99,26 @@ def test_explicit_repartition_counts_as_data_shuffle(spark, sf_dir):
     guarded = catalog.load_table_parallel(spark, sf_dir, "documents", "doc_id")
     assert count_data_shuffles(guarded) == 0
     assert count_data_shuffles(guarded.repartition(n)) == 1
+
+
+def test_guard_shaped_repartition_over_aggregate_counts(spark, sf_dir):
+    """The guard's exchange is recognised by its place in the plan, not
+    by a process-wide record of (key, count) signatures: the same key
+    and count repartitioning an aggregate or a join is a data shuffle,
+    even after the guard has fired on that key in this session."""
+    n = spark.sparkContext.defaultParallelism
+    guarded = catalog.load_table_parallel(spark, sf_dir, "documents", "doc_id")
+    assert count_data_shuffles(guarded) == 0
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    agg = docs.groupBy("doc_id").count()
+    # the aggregate's own exchange plus the query-level repartition
+    assert count_shuffles(agg) == 1
+    assert count_data_shuffles(agg.repartition(n, "doc_id")) == 2
+    joined = docs.select("doc_id", "lang").join(
+        docs.select("doc_id", "source").hint("shuffle_hash"), "doc_id"
+    )
+    shuffles = count_data_shuffles(joined)
+    assert count_data_shuffles(joined.repartition(n, "doc_id")) == shuffles + 1
 
 
 def test_min_bytes_gate_sums_directory_parts(spark, tmp_path):

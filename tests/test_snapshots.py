@@ -1414,7 +1414,7 @@ def _two_root_table(spark, path) -> SnapshotTable:
 def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
     """With the schema in the manifest, a range probe is one scan job,
     not an inference job plus the scan, and a pruned CoW merge saves
-    the inference job over its affected files (5 jobs here, against 6
+    the inference job over its affected files (3 jobs here, against 4
     when the schema is inferred)."""
     t = _two_root_table(spark, str(tmp_path / "t"))
     legacy = _inferring(_two_root_table(spark, str(tmp_path / "legacy")))
@@ -1423,7 +1423,7 @@ def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
     changes = spark.createDataFrame(
         [(5, "U5", False), (7, None, True)], "k long, v string, _del boolean"
     )
-    for tbl, jobs in ((t, 5), (legacy, 6)):
+    for tbl, jobs in ((t, 3), (legacy, 4)):
         assert _jobs(
             spark,
             lambda: tbl.merge(changes, key_cols=["k"], delete_col="_del"),
@@ -1432,21 +1432,13 @@ def test_recorded_schema_reads_run_no_inference_job(spark, tmp_path):
         assert got[5] == "U5" and 7 not in got and len(got) == 199
 
 
-def test_cdc_batch_cow_merge_runs_four_jobs(spark, tmp_path):
-    """A CDC micro-batch's copy-on-write merge (dedup window, pruned by
-    key range) runs 4 Spark jobs: the window's shuffle, the checkpoint
-    that materializes the change set and observes its summary, the
-    broadcast of its keys, and the write. Table and batch are built
-    from pandas frames, as a sink receives them."""
-    import pandas as pd
+def _cdc_batch_merge_jobs(spark, tmp_path, frame) -> int:
+    """Jobs of a CDC micro-batch's copy-on-write merge (dedup window,
+    pruned by key range), table and batch built by ``frame``; checks the
+    merged rows."""
     from pyspark.sql import functions as F
 
     from philotes_spark.streaming.lakehouse import latest_change_per_key
-
-    cols = ["id", "name", "amount", "_cdc_op", "_cdc_lsn"]
-
-    def frame(rows):
-        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
 
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.commit(
@@ -1460,12 +1452,43 @@ def test_cdc_batch_cow_merge_runs_four_jobs(spark, tmp_path):
     changes = latest_change_per_key(frame(events), ["id"], "_cdc_lsn").withColumn(
         "_del", F.col("_cdc_op") == "DELETE"
     )
-    assert _jobs(
+    jobs = _jobs(
         spark, lambda: t.merge(changes, key_cols=["id"], delete_col="_del")
-    ) == 4
+    )
     got = {r.id: r.name for r in t.read().collect()}
     assert len(got) == 2000 + 30 - 5
     assert got[1995] == "u45" and got[2029] == "i29" and 1984 not in got
+    return jobs
+
+
+_CDC_COLS = ["id", "name", "amount", "_cdc_op", "_cdc_lsn"]
+
+
+def test_cdc_batch_cow_merge_runs_four_jobs(spark, tmp_path):
+    """A CDC micro-batch's copy-on-write merge (dedup window, pruned by
+    key range) runs 4 Spark jobs: the window's shuffle, the checkpoint
+    that materializes the change set and observes its summary, the
+    broadcast of its keys, and the write. Table and batch are built
+    from pandas frames, as a sink receives them."""
+    import pandas as pd
+
+    def frame(rows):
+        return spark.createDataFrame(pd.DataFrame(rows, columns=_CDC_COLS))
+
+    assert _cdc_batch_merge_jobs(spark, tmp_path, frame) == 4
+
+
+def test_list_built_cdc_batch_cow_merge_runs_four_jobs(spark, tmp_path):
+    """The same merge with table and batch built from Python lists runs
+    the same 4 jobs: the anti-join broadcasts the keys by the observed
+    row count, where the list-built plan's size estimate (~10^19 bytes)
+    planned a shuffle join."""
+    schema = "id long, name string, amount double, _cdc_op string, _cdc_lsn long"
+
+    def frame(rows):
+        return spark.createDataFrame(rows, schema)
+
+    assert _cdc_batch_merge_jobs(spark, tmp_path, frame) == 4
 
 
 def test_mor_reads_run_no_delta_inference_job(spark, tmp_path):
@@ -1521,8 +1544,9 @@ def _footer_opens(monkeypatch) -> list[str]:
 
 
 def test_commit_reads_each_new_footer_once(spark, tmp_path, monkeypatch):
-    """An append and a CoW merge read each new data file's footer once,
-    for its size, rows, stats and schema together, and no other file's."""
+    """An append, a CoW merge and a late-append rewrite read each new
+    data file's footer once, for its size, rows, stats and schema
+    together, and no other file's."""
     from collections import Counter
 
     t = SnapshotTable(spark, str(tmp_path / "t"))
@@ -1553,3 +1577,19 @@ def test_commit_reads_each_new_footer_once(spark, tmp_path, monkeypatch):
         assert m["root_schemas"], step
     assert m["added_rows"] == 1
     assert t._resolve(version=2)["added_rows"] == 20
+    # a late append after a pending equality delta, rewritten: the
+    # empty-part filter and the manifest share one read per staged file
+    t.merge(spark.createDataFrame([(5, "U5")], rows), key_cols=["k"], mode="mor")
+    t.commit(spark.createDataFrame([(5, "late"), (70, "c")], rows).coalesce(1))
+    before = set(t._resolve()["files"])
+    opened = _footer_opens(monkeypatch)
+    assert t.rewrite_late_appends() is not None
+    monkeypatch.undo()
+    m = t._resolve()
+    new = set(m["files"]) - before
+    counts = Counter(opened)
+    assert new and new <= set(counts) and set(counts.values()) == {1}, opened
+    staged = {os.path.dirname(f) for f in new}
+    assert {os.path.dirname(f) for f in counts} == staged, opened
+    assert all(m["file_stats"][f].get("k") for f in new)
+    assert set(m["file_meta"]) == set(m["files"])
