@@ -7,6 +7,11 @@ spellings (``ALTER TABLE … WRITE ORDERED BY`` / ``WRITE UNORDERED``,
 published v2 metadata are covered in test_catalog_rest.py).
 """
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -647,3 +652,34 @@ def test_commit_explicit_order_canonicalized(spark, table):
     assert table.set_write_order(sort_by=["k DESC"]) == v
     assert table.set_write_order(sort_by=["k desc NULLS LAST"]) == v
     assert _m(table)["clustered_roots"] == marks
+
+
+def test_write_order_query_at_two_cores(sf_dir):
+    """``snapshot_write_order_read`` returns its rows whatever the file
+    count of the sort rewrite, which follows the session's parallelism:
+    at ``local[2]`` and sf0.01 the rewrite writes 2 files that both meet
+    the probed middle half, so a "some file prunes" check would raise.
+    A fresh JVM, because the test session's core count is fixed."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from philotes_spark import registry
+        from philotes_spark.session import get_spark
+
+        spark = get_spark(app_name="write-order-2-cores", cpus=2)
+        spark.sparkContext.setLogLevel("ERROR")
+        registry.load_all()
+        n = registry.QUERIES["snapshot_write_order_read"](spark, {sf01!r}).count()
+        assert n > 0, n
+        print("WRITE_ORDER_OK", n, flush=True)
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "WRITE_ORDER_OK" in proc.stdout, proc.stdout
