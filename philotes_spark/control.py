@@ -1,5 +1,5 @@
 """Control plane (SURVEY §2A A32-A35): pipeline/source registry with
-lifecycle management, catalog browsing, and source discovery.
+lifecycle management and catalog browsing.
 
 The reference exposes these as a Gin REST API over services
 (`internal/api/services/pipeline.go:38-289`, `source.go:34-225`,
@@ -136,32 +136,3 @@ def describe_table(spark: SparkSession, table: str) -> DataFrame:
     for part in table.split("."):
         validate_identifier(part)
     return spark.sql(f"DESCRIBE {table}")
-
-
-# --- A32: source discovery (source.go:227-384) -----------------------------
-
-
-def discover_jdbc_tables(
-    spark: SparkSession,
-    url: str,
-    user: str,
-    password: str,
-    schema: str = "public",
-) -> DataFrame:
-    """information_schema scan of a JDBC source — the A32 discovery query
-    verbatim, executed by Spark's JDBC reader. Requires the JDBC driver
-    jar on the classpath (not bundled here); the fixture-backed tests use
-    the in-process catalog path above instead."""
-    q = (
-        "(SELECT table_schema, table_name, column_name, data_type, "
-        "is_nullable FROM information_schema.columns "
-        f"WHERE table_schema = '{validate_identifier(schema)}') AS cols"
-    )
-    return (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", q)
-        .option("user", user)
-        .option("password", password)
-        .load()
-    )

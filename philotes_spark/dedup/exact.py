@@ -29,13 +29,3 @@ def dedup_exact(
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def drop_exact_duplicates(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """Return the deduplicated dataset itself (survivor rows only) — a
-    semi-join of the input against the survivor set, so full rows never
-    shuffle twice."""
-    survivors = dedup_exact(df, content_col, id_col).select(
-        F.col("survivor_id").alias(id_col)
-    )
-    return df.join(survivors, id_col, "left_semi")

@@ -88,15 +88,6 @@ def fingerprint_md5(toks: Column) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def token_ord_hash(tok: Column, pos: Column) -> Column:
-    """Per-token order-weighted hash term for the rolling fingerprint:
-    ``(pos+1) * (31*length(tok) + ascii(first_char))``. Cross-engine exact
-    (same arithmetic in the DuckDB oracle)."""
-    return (pos + 1) * (
-        F.length(tok) * 31 + F.ascii(F.substring(tok, 1, 1))
-    ).cast("long")
-
-
 # --- PII redaction (§2C training-data scrub stage) ---------------------------
 
 # Cross-engine-safe patterns: every construct (classes, bounded reps, \b)

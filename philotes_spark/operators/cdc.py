@@ -6,7 +6,6 @@ Reference parity map (SURVEY §2A):
   CDC system columns (``internal/iceberg/types.go:178-201``).
 - ``latest_view``           ← B10 dedup-to-latest (``docs/query/
   sample-queries.sql:94-102``) — the canonical "current state" view.
-- ``history_view``          ← B11 change history (``sample-queries.sql:104-112``).
 - ``apply_cdc``             ← materialize current state from a CDC log
   (insert/update upsert, delete removal) — what MERGE INTO would do on
   Delta/Iceberg, expressed as window-dedup + filter so it runs anywhere.
@@ -213,12 +212,6 @@ def apply_cdc(
     return latest_view(df, key_cols, order_cols).filter(
         ~F.col(op_col).isin("DELETE", "TRUNCATE")
     )
-
-
-def history_view(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """B11: full change history for filtering by key, ordered by commit
-    position. Filter-by-key prunes partitions/row-groups before the sort."""
-    return df.orderBy(*key_cols, order_col)
 
 
 def buffer_stats(df: DataFrame, processed_col: str = "processed_at") -> DataFrame:

@@ -37,6 +37,49 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def unit_vector_fold(score):
+    """A ``mapInArrow`` function over batches with a vector column ``v``:
+    it yields what ``score(batch, U)`` yields for every batch, ``U`` the
+    batch's unit vectors as an ``(n, d)`` float64 matrix. Zero-norm rows
+    have no direction and are left out of both ``batch`` and ``U``.
+
+    The decode reshapes by one shared length, so a ragged or null vector
+    whose lengths happen to sum to ``n * d`` would shift every later row:
+    both are refused. The returned closure ships to the Python workers
+    by value and calls nothing else of this package."""
+
+    def fold(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            col = batch.column("v")
+            lens = col.value_lengths().to_numpy(zero_copy_only=False)
+            if col.null_count or (lens != lens[0]).any():
+                raise ValueError(
+                    "expected non-null vectors of one length; got lengths "
+                    f"{sorted(set(lens.tolist()))} and {col.null_count} "
+                    "null(s) in a batch"
+                )
+            M = (
+                col.flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64, copy=False)
+                .reshape(len(col), int(lens[0]))
+            )
+            nrm = np.linalg.norm(M, axis=1)
+            live = nrm > 0
+            if not live.all():
+                batch, M, nrm = batch.filter(pa.array(live)), M[live], nrm[live]
+                if not batch.num_rows:
+                    continue
+            yield from score(batch, M / nrm[:, None])
+
+    return fold
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
@@ -162,41 +205,23 @@ def cosine_topk_arrow(
     Qn = Q / qn[:, None]
     n_q = len(qids)
 
-    def score(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            col = batch.column("v")
-            lens = col.value_lengths().to_numpy(zero_copy_only=False)
-            M = (
-                col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, int(lens[0]))
-            )
-            ids = batch.column("id").to_numpy(zero_copy_only=False)
-            nrm = np.linalg.norm(M, axis=1)
-            keep = nrm > 0
-            if not keep.all():
-                ids, M, nrm = ids[keep], M[keep], nrm[keep]
-                n = len(ids)
-            if not n:
-                continue
-            sims = (M / nrm[:, None]) @ Qn.T  # (n, n_q)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.tile(qids, n)),
-                    pa.array(np.repeat(ids.astype(np.int64), n_q)),
-                    pa.array(sims.ravel()),
-                ],
-                ["query_id", "neighbor_id", "sim"],
-            )
+    def score(batch, U):
+        ids = batch.column("id").to_numpy(zero_copy_only=False)
+        n = len(ids)
+        sims = U @ Qn.T  # (n, n_q)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.tile(qids, n)),
+                pa.array(np.repeat(ids.astype(np.int64), n_q)),
+                pa.array(sims.ravel()),
+            ],
+            ["query_id", "neighbor_id", "sim"],
+        )
 
     scored = (
         (emb if corpus is None else corpus)
         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .mapInArrow(score, "query_id long, neighbor_id long, sim double")
+        .mapInArrow(unit_vector_fold(score), "query_id long, neighbor_id long, sim double")
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -234,7 +259,7 @@ def similarity_pairs(
     (n/B)-row buffered key group, parallelism = block pairs, and AQE can
     split any residual skew. At 100 TB you raise ``n_blocks`` ∝ n so a
     block fits an executor core; the sub-quadratic paths for when exact
-    isn't required are ``lsh_topk``/``ivf_topk``.
+    isn't required are ``lsh_topk``/``ann.topk``.
 
     A pair lands in exactly one block pair: cross-block (i<j) once by
     construction, diagonal (i=i) deduped by requiring raw id order; ids
@@ -353,31 +378,6 @@ def lsh_topk(
 
 
 # --- int8-quantized tier (memory-bound scale path) --------------------------
-
-
-def quantize_int8(vec: Column) -> Column:
-    """Symmetric per-vector int8 quantization: q_i = round(127 · x_i /
-    max|x|). Cosine is scale-invariant, so the per-vector scale cancels —
-    quantized cosine approximates exact cosine to ~1/127 resolution while
-    the stored corpus shrinks 4× (float32→int8) / 8× (float64→int8).
-    At 100 TB of embeddings this is the difference between a corpus that
-    fits executor memory and one that doesn't; same broadcast-scan plan
-    as ``cosine_topk``, integer multiply-adds inside codegen.
-
-    NOTE: the max|x| subexpression sits inside the transform lambda here,
-    which the engine may re-evaluate per element (O(d²) per vector). Fine
-    for one-off columns; for scans use the two-step projection in
-    ``quantized_cosine_topk`` — materializing the max as its own column
-    first measured ~10× faster at d=64."""
-    # greatest(mx, ε): an all-zero vector quantizes to all-zero ints
-    # instead of nulls (0/0) that would silently drop the row downstream
-    mx = F.greatest(
-        F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double")))),
-        F.lit(1e-12),
-    )
-    return F.transform(
-        vec, lambda x: F.round(x.cast("double") * 127.0 / mx).cast("int")
-    )
 
 
 def quantized_cosine_topk(

@@ -20,9 +20,10 @@ text_queries.py):
   bounded query-vector collect pays the extra shuffle), norm_stats
   +7%, label_centroids +123%, label_inertia +37% at sf1 (posexplode
   collapses map-side into partial aggs — the exchange only adds bytes);
-- NOT convertible: ivf/pq/ivfpq/filtered_ivf serving — their
-  limit(sample).collect() training inputs are scan-order-sensitive, so
-  a repartition would change trained codebooks and therefore results.
+- ANN serving (ivf/pq/ivfpq/filtered_ivf, ``_ann_index``): only the
+  row-local encode converts; the limit(sample).collect() training input
+  is scan-order-sensitive, so a repartition would change trained
+  codebooks and therefore results.
 """
 
 from __future__ import annotations
@@ -117,7 +118,7 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ 0.35) — the exact
     tier of embedding dedup, planned as a block-matrix equi-join (no
     cartesian node; see similarity_pairs). The O(n²) comparisons are
-    inherent to exactness; lsh_topk/ivf_topk are the sub-quadratic
+    inherent to exactness; lsh_topk/ann.topk are the sub-quadratic
     approximate paths.
 
     τ=0.35 is tuned to the synthetic fixtures' weak structure (max
@@ -192,30 +193,37 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """(centroids, kept cells) of ``sf_dir``'s corpus, built once per
-    session and corpus: index construction is the amortized half of IVF
-    serving, and every IVF query reuses it."""
-    from philotes_spark.similarity.ivf import build_index
+# The registered index settings: IVF and PQ are IVF-PQ without codes and
+# with one cell (similarity/ann.py). Each is built once per session and
+# corpus and shared by every query that names it.
+_ANN = {
+    "ivf_index": dict(n_cells=16),
+    "pq_index": dict(n_cells=0, m=16, ks=16, n_iter=10),
+    "ivfpq_index": dict(n_cells=16, m=8, ks=16),
+}
 
-    # training samples the PLAIN scan (byte-stable centroids); the
-    # encode pass is row-local and takes the scan-parallelism guard
-    # (r17, VERDICT r16 #5 — the single-row-group fixture otherwise
-    # runs the whole interpreted-lambda assignment on one task)
-    # min_bytes=4MB, re-measured for the r17 Arrow assign
-    # (assign_cells_arrow cut per-row cost ~50x, moving the guard's
-    # crossover up): interleaved min-of-4 A/B — guard +23% at
-    # 0.8 MB/sf0.1 (0.886 vs 1.093 s), +14% at 2.4 MB/sf0.3,
-    # -7% at 5.2 MB/sf1 (1.130 -> 1.050 s)
+
+def _ann_index(spark: SparkSession, sf_dir: str, emb: DataFrame, kind: str):
+    """``sf_dir``'s ``kind`` index (``similarity.ann.build``), built once
+    per session and corpus: training and the corpus encode are the
+    amortized half of ANN serving."""
+    from philotes_spark.similarity.ann import build
+
+    # training samples the PLAIN scan (byte-stable centroids and
+    # codebooks); the row-local encode takes the scan-parallelism guard
+    # (r17) with min_bytes=4MB: interleaved min-of-4 A/B of the Arrow
+    # encode — guard +23% (IVF) / +24% (IVF-PQ) at 0.8 MB/sf0.1, +14% at
+    # 2.4 MB/sf0.3, -7% / -4% at 5.2 MB/sf1: the mapInArrow encode
+    # amortizes Python worker startup only above a few MB of corpus
     return memo(
         spark,
-        ("ivf_index", sf_dir),
-        lambda: build_index(
+        (kind, sf_dir),
+        lambda: build(
             emb,
-            n_centroids=16,
             encode_df=load_table_parallel(
                 spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
             ),
+            **_ANN[kind],
         ),
     )
 
@@ -225,12 +233,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-cell approximate top-10 for the same query set — the
     cluster-pruned ANN path (train on sample, probe nearest cells).
     The index is built once per corpus and cached; each call pays only
-    probe + equi-join + re-rank, the steady-state serving cost."""
-    from philotes_spark.similarity.ivf import ivf_topk
+    probe + equi-join + exact scoring, the steady-state serving cost."""
+    from philotes_spark.similarity.ann import topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb, QUERY_IDS, k=10, n_probe=6, index=_ivf_index(spark, sf_dir, emb)
+    return topk(
+        emb, QUERY_IDS, _ann_index(spark, sf_dir, emb, "ivf_index"), k=10, n_probe=6
     ).coalesce(1).orderBy("query_id", "rank")
 
 
@@ -466,32 +474,18 @@ def sim_label_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("sim_pq_topk")  # rows-only: per-subspace codebooks are engine-local
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-10 with exact re-rank — the
-    compressed-domain ANN tier (similarity/pq.py): the corpus is served
-    from 16-byte codes (16 subspaces × 16 codewords, 16× smaller than
-    float32), queries score by codebook table lookups and only the
-    candidate list touches float vectors. Codebooks + code column are
-    built once per corpus and cached — each call pays the steady-state
-    serving cost, like the IVF tier. Recall pinned vs exact in
-    tests/test_similarity_recall.py (ADC 0.48, rerank-100 0.96)."""
-    from philotes_spark.similarity.pq import encode_pq, pq_topk, train_pq_codebooks
+    compressed-domain ANN tier (the one-cell setting of similarity/ann.py):
+    the corpus is served from 16-byte codes (16 subspaces × 16 codewords,
+    16× smaller than float32), queries score by codebook table lookups
+    and only the candidate list touches float vectors. Codebooks + code
+    column are built once per corpus and cached — each call pays the
+    steady-state serving cost, like the IVF tier. Recall pinned vs exact
+    in tests/test_similarity_recall.py (ADC 0.48, rerank-100 0.96)."""
+    from philotes_spark.similarity.ann import topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def build():
-        books = train_pq_codebooks(emb, m=16, ks=16)
-        # codebooks train on the plain scan; the encode projection takes
-        # the scan-parallelism guard (r17, see build_index)
-        # min_bytes=4MB: the Arrow-batched numpy encode is cheap per
-        # row — A/B (ivfpq twin, same fold): +24% at 0.8 MB/sf0.1,
-        # -4% at 5.2 MB/sf1, so the guard stays off until a few MB
-        emb_par = load_table_parallel(
-            spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
-        )
-        return books, keep(encode_pq(emb_par, books))
-
-    books, codes = memo(spark, ("pq_index", sf_dir), build)
-    return pq_topk(
-        emb, QUERY_IDS, books, k=10, rerank=100, codes=codes
+    return topk(
+        emb, QUERY_IDS, _ann_index(spark, sf_dir, emb, "pq_index"), k=10, rerank=100
     ).coalesce(1).orderBy("query_id", "rank")
 
 
@@ -556,40 +550,23 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-10 for the standard query set — the combined production
     ANN layout (coarse cells prune WHICH rows are scored, residual PQ
     codes shrink WHAT is read; exact re-rank of the ADC top-50 restores
-    true cosines). similarity/ivfpq.py documents the decomposition
+    true cosines). similarity/ann.py documents the decomposition
     <q,v> ≈ <q,centroid[cell]> + LUT-sum. Recall floors and the
     rerank-recovers-exact contract are pinned in
     tests/test_similarity_recall.py. The index (centroids + codebooks +
     persisted coded corpus) is built once per corpus and cached, same as
     the IVF and PQ entries — training + the corpus encode are the
     amortized half; each call pays probe + ADC + re-rank only."""
-    from philotes_spark.similarity.ivfpq import build_ivfpq_index, ivfpq_topk
+    from philotes_spark.similarity.ann import topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # plain-scan training, guarded-scan encode (r17, see build_index)
-    # min_bytes=4MB: interleaved min-of-4 A/B (r17) — +24% at
-    # 0.8 MB/sf0.1 (1.044 -> 1.296 s), -4% at 5.2 MB/sf1
-    # (2.326 -> 2.235 s): the mapInArrow encode amortizes Python
-    # worker startup only above a few MB of corpus
-    index = memo(
-        spark,
-        ("ivfpq_index", sf_dir),
-        lambda: build_ivfpq_index(
-            emb,
-            n_centroids=16,
-            encode_df=load_table_parallel(
-                spark, sf_dir, "embeddings", "vec_id", min_bytes=4 << 20
-            ),
-        ),
-    )
-    return ivfpq_topk(
+    return topk(
         emb,
         QUERY_IDS,
+        _ann_index(spark, sf_dir, emb, "ivfpq_index"),
         k=10,
-        n_centroids=16,
         n_probe=4,
         rerank=50,
-        index=index,
     ).coalesce(1).orderBy("query_id", "rank")
 
 
@@ -669,15 +646,15 @@ def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the exact filtered ground truth is gated in
     test_similarity_recall.py; the exact twin (sim_filtered_topk) is
     oracle-backed."""
-    from philotes_spark.similarity.ivf import ivf_topk
+    from philotes_spark.similarity.ann import topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
+    return topk(
         emb,
         QUERY_IDS,
+        _ann_index(spark, sf_dir, emb, "ivf_index"),
         k=10,
         n_probe=8,
-        index=_ivf_index(spark, sf_dir, emb),
         corpus=emb.filter(F.col("label") == 1),
     ).coalesce(1).orderBy("query_id", "rank")
 
@@ -932,9 +909,9 @@ def sim_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 nearest cells by the same ordering, and candidates re-rank by
     exact double cosine. The driver hash-compare proves the IVF
     construction itself — cell assignment, multi-cell probing, the
-    cell equi-join, re-rank — while the production ``ivf_topk``
-    (k-means-trained codebook, engine-local) stays recall-gated.
-    Scale shape matches ivf.py: assignment is one projection over the
+    cell equi-join, re-rank — while the production IVF setting of
+    ``ann.topk`` (k-means-trained codebook, engine-local) stays
+    recall-gated. Scale shape matches ann.py: assignment is one projection over the
     corpus, the probe join is equi on cell, no cross join."""
     from pyspark.sql import Window
 
@@ -1118,8 +1095,8 @@ def sim_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes ADC an O(m) table lookup), top-50 ADC candidates re-ranked by
     exact double cosine. The hash-compare proves the PQ construction
     itself — sub-space split, codeword assignment, ADC accumulation,
-    rerank cut — while the production k-means ``pq_topk`` stays
-    recall-gated. Scale shape matches pq.py: encode is one projection,
+    rerank cut — while the production k-means PQ setting of
+    ``ann.topk`` stays recall-gated. Scale shape matches ann.py: encode is one projection,
     ADC carries (query × corpus × m) longs, rerank reads floats for 50
     candidates per query only."""
     from pyspark.sql import Window
@@ -1395,8 +1372,8 @@ def sim_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     j, codeⱼ(n)), so the query-side join is exactly the PQ twin's shape
     — est(q, n) = Σⱼ S1(q, j, codeⱼ(n)) − t(n), exact integers end to
     end. Top-30 ADC candidates re-rank by exact double cosine. The
-    production k-means ``ivfpq_topk`` stays recall-gated. Scale shape
-    matches ivfpq.py: encode is a projection, ADC carries longs keyed by
+    production k-means IVF-PQ setting of ``ann.topk`` stays
+    recall-gated. Scale shape matches ann.py: encode is a projection, ADC carries longs keyed by
     the probed cells only, floats read for 30 candidates per query."""
     from pyspark.sql import Window
 
@@ -1746,7 +1723,7 @@ def dedup_semantic_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook + a per-id argmin window; pair generation shuffles once
     on cluster id; canonicalization is a groupBy-min + left join —
     the production variant swaps the fixed codebook for k-means
-    centroids (similarity/ivf.py) with identical downstream plan."""
+    centroids (similarity/ann.py) with identical downstream plan."""
     from pyspark.sql import Window
 
     from philotes_spark.similarity.knn import dot

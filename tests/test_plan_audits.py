@@ -334,11 +334,8 @@ def test_no_forced_broadcast_of_scaling_tables(spark, sf_dir):
     bounding = ("Aggregate", "GlobalLimit", "LocalLimit", "ResolvedHint")
     offenders = []
     for name, fn in registry.QUERIES.items():
-        try:
-            df = fn.__wrapped__(spark, sf_dir)
-        except Exception:
-            continue  # queries needing extra fixtures are audited elsewhere
-        for sub in forced_broadcast_hints(df):
+        # every query builds on the fixture: a build failure fails here
+        for sub in forced_broadcast_hints(fn.__wrapped__(spark, sf_dir)):
             body = sub.split("\n", 1)[1] if "\n" in sub else ""
             touches = [t for t in SCALING_TABLES if f"{t}.parquet" in body]
             if touches and not any(b in body for b in bounding):

@@ -3,18 +3,48 @@ paths (LSH, IVF) must actually find what the exact path finds — a bucket
 scheme with broken recall passes any rows-only check, so pin it here.
 """
 
+import warnings
+
 import pytest
 
-from philotes_spark.similarity.ivf import assign_cells, ivf_topk, train_centroids
+from philotes_spark.similarity.ann import build, encode, topk, train
 from philotes_spark.similarity.knn import cosine_topk, lsh_topk
 from philotes_spark.sources.catalog import load_table
+from philotes_spark.state import release
+from tests.ann_reference import assign_cells, encode_ivfpq_expr, encode_pq
 
 QUERY_IDS = [0, 1, 2, 3, 4]
+
+# the registered queries' index settings (similarity/queries.py _ANN)
+IVF = dict(n_cells=16)
+PQ = dict(n_cells=0, m=16, ks=16, n_iter=10)
+IVFPQ = dict(n_cells=16, m=8, ks=16)
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").cache()
+
+
+@pytest.fixture(scope="module")
+def ivf_index(emb):
+    index = build(emb, **IVF)
+    yield index
+    release(index[2])
+
+
+@pytest.fixture(scope="module")
+def pq_index(emb):
+    index = build(emb, **PQ)
+    yield index
+    release(index[2])
+
+
+@pytest.fixture(scope="module")
+def ivfpq_index(emb):
+    index = build(emb, **IVFPQ)
+    yield index
+    release(index[2])
 
 
 @pytest.fixture(scope="module")
@@ -35,22 +65,24 @@ def _recall(approx_rows, exact):
     return hits / total
 
 
-def test_ivf_recall_beats_random_pruning(emb, exact_neighbors):
+def test_ivf_recall_beats_random_pruning(emb, exact_neighbors, ivf_index):
     # this corpus is weakly structured (top cosine ≈ 0.33), so absolute
     # recall is data-limited; the index contract is relative: probing
     # 4/16 cells must find well over 4/16 of the true neighbors
-    rows = ivf_topk(emb, QUERY_IDS, k=10, n_centroids=16, n_probe=4).collect()
+    rows = topk(emb, QUERY_IDS, ivf_index, k=10, n_probe=4).collect()
     assert _recall(rows, exact_neighbors) >= 0.40  # random pruning ⇒ 0.25
 
 
-def test_ivf_half_probe_recall(emb, exact_neighbors):
-    rows = ivf_topk(emb, QUERY_IDS, k=10, n_centroids=16, n_probe=8).collect()
+def test_ivf_half_probe_recall(emb, exact_neighbors, ivf_index):
+    rows = topk(emb, QUERY_IDS, ivf_index, k=10, n_probe=8).collect()
     assert _recall(rows, exact_neighbors) >= 0.65
 
 
 def test_ivf_full_probe_equals_exact(emb, exact_neighbors):
     # probing every cell must reduce IVF to the exact result
-    rows = ivf_topk(emb, QUERY_IDS, k=10, n_centroids=8, n_probe=8).collect()
+    index = build(emb, n_cells=8)
+    rows = topk(emb, QUERY_IDS, index, k=10, n_probe=8).collect()
+    release(index[2])
     assert _recall(rows, exact_neighbors) == 1.0
 
 
@@ -62,8 +94,7 @@ def test_lsh_recall_vs_exact(emb, exact_neighbors):
 
 
 def test_ivf_cells_partition_corpus(emb):
-    cents = train_centroids(emb, n_centroids=16)
-    cells = assign_cells(emb, cents)
+    cells = encode(emb, *train(emb, **IVF))
     n = emb.count()
     assert cells.count() == n  # assignment is a projection: no row fan-out
     stats = cells.groupBy("cell").count().collect()
@@ -72,9 +103,12 @@ def test_ivf_cells_partition_corpus(emb):
 
 
 def test_ivf_deterministic(emb):
-    a = ivf_topk(emb, QUERY_IDS, k=5, seed=7).collect()
-    b = ivf_topk(emb, QUERY_IDS, k=5, seed=7).collect()
-    assert a == b
+    runs = []
+    for _ in range(2):
+        index = build(emb, seed=7)
+        runs.append(topk(emb, QUERY_IDS, index, k=5).collect())
+        release(index[2])
+    assert runs[0] == runs[1]
 
 
 def test_quantized_recall_near_exact(emb, exact_neighbors):
@@ -105,32 +139,20 @@ def test_quantized_estimate_close_to_exact(emb):
 # --- product quantization (PQ/ADC) tier --------------------------------------
 
 
-@pytest.fixture(scope="module")
-def pq_books(emb):
-    from philotes_spark.similarity.pq import train_pq_codebooks
-
-    return train_pq_codebooks(emb, m=16, ks=16)
-
-
-def test_pq_adc_recall_beats_chance(emb, exact_neighbors, pq_books):
+def test_pq_adc_recall_beats_chance(emb, exact_neighbors, pq_index):
     """16×16 codes ≈ 16 bytes/vector (16× vs float32): raw ADC ranking (no float reads at
     query time) must still land well above random top-10 (10/499 ≈ 2%)."""
-    from philotes_spark.similarity.pq import pq_topk
-
-    rows = pq_topk(emb, QUERY_IDS, pq_books, k=10, rerank=None).collect()
+    rows = topk(emb, QUERY_IDS, pq_index, k=10, rerank=None).collect()
     assert _recall(rows, exact_neighbors) >= 0.35  # measured 0.48
 
 
-def test_pq_rerank_recovers_exact_ranking(emb, exact_neighbors, pq_books):
+def test_pq_rerank_recovers_exact_ranking(emb, exact_neighbors, pq_index):
     """Exact re-rank of the ADC candidate list is the serving stack:
     candidates=50 → most of exact top-10; candidates=100 → nearly all.
     The returned similarities must BE the exact cosines."""
-    from philotes_spark.similarity.knn import cosine_topk
-    from philotes_spark.similarity.pq import pq_topk
-
-    r50 = pq_topk(emb, QUERY_IDS, pq_books, k=10, rerank=50).collect()
+    r50 = topk(emb, QUERY_IDS, pq_index, k=10, rerank=50).collect()
     assert _recall(r50, exact_neighbors) >= 0.75  # measured 0.90
-    r100 = pq_topk(emb, QUERY_IDS, pq_books, k=10, rerank=100).collect()
+    r100 = topk(emb, QUERY_IDS, pq_index, k=10, rerank=100).collect()
     assert _recall(r100, exact_neighbors) >= 0.85  # measured 0.96
     exact_sims = {
         (r.query_id, r.neighbor_id): r.cosine_sim
@@ -141,26 +163,33 @@ def test_pq_rerank_recovers_exact_ranking(emb, exact_neighbors, pq_books):
             assert abs(r.cosine_sim - exact_sims[(r.query_id, r.neighbor_id)]) < 1e-9
 
 
-def test_pq_codes_deterministic_and_bounded(emb, pq_books):
-    from philotes_spark.similarity.pq import encode_pq
-
-    a = {r.id: tuple(r.codes) for r in encode_pq(emb, pq_books).collect()}
-    b = {r.id: tuple(r.codes) for r in encode_pq(emb, pq_books).collect()}
+def test_pq_codes_deterministic_and_bounded(emb, pq_index):
+    centroids, books, _ = pq_index
+    a = {r.id: (r.cell, tuple(r.codes)) for r in encode(emb, centroids, books).collect()}
+    b = {r.id: (r.cell, tuple(r.codes)) for r in encode(emb, centroids, books).collect()}
     assert a == b
-    assert all(len(c) == 16 and all(0 <= x < 16 for x in c) for c in a.values())
+    assert all(cell == 0 and len(c) == 16 and all(0 <= x < 16 for x in c)
+               for cell, c in a.values())
+
+
+def test_arrow_pq_encode_row_identical_to_expr(emb, pq_index):
+    """PQ is the one-cell setting of the Arrow encoder: its codes are
+    row-identical to the pure-expression PQ reference on the fixture."""
+    centroids, books, coded = pq_index
+    arrow = {r.id: tuple(r.codes) for r in coded.collect()}
+    expr = {r.id: tuple(r.codes) for r in encode_pq(emb, books).collect()}
+    assert arrow == expr
 
 
 # --- IVF-PQ (combined index) --------------------------------------------------
 
 
-def test_ivfpq_probe_rerank_recall(emb, exact_neighbors):
+def test_ivfpq_probe_rerank_recall(emb, exact_neighbors, ivfpq_index):
     """The serving config (probe 4/16 cells, exact re-rank of ADC top-50)
     must beat IVF-style random-pruning chance by a wide margin."""
-    from philotes_spark.similarity.ivfpq import ivfpq_topk
-
-    rows = ivfpq_topk(emb, QUERY_IDS, k=10, n_probe=4, rerank=50).collect()
+    rows = topk(emb, QUERY_IDS, ivfpq_index, k=10, n_probe=4, rerank=50).collect()
     assert _recall(rows, exact_neighbors) >= 0.40  # measured 0.50
-    rows = ivfpq_topk(emb, QUERY_IDS, k=10, n_probe=8, rerank=100).collect()
+    rows = topk(emb, QUERY_IDS, ivfpq_index, k=10, n_probe=8, rerank=100).collect()
     assert _recall(rows, exact_neighbors) >= 0.55  # measured 0.68
 
 
@@ -172,12 +201,9 @@ def test_ivfpq_full_probe_rerank_near_exact(emb, exact_neighbors):
     cluster structure gives residual coding little to remove — but the
     stacked index still wins on bytes touched: n_probe/n_centroids of
     the code rows.)"""
-    from philotes_spark.similarity.ivfpq import ivfpq_topk
-    from philotes_spark.similarity.knn import cosine_topk
-
-    rows = ivfpq_topk(
-        emb, QUERY_IDS, k=10, n_centroids=16, n_probe=16, rerank=200, m=16
-    ).collect()
+    index = build(emb, n_cells=16, m=16, ks=16)
+    rows = topk(emb, QUERY_IDS, index, k=10, n_probe=16, rerank=200).collect()
+    release(index[2])
     assert _recall(rows, exact_neighbors) >= 0.85  # measured 0.94
     exact_sims = {
         (r.query_id, r.neighbor_id): r.cosine_sim
@@ -189,37 +215,29 @@ def test_ivfpq_full_probe_rerank_near_exact(emb, exact_neighbors):
 
 
 def test_ivfpq_index_deterministic_and_bounded(emb):
-    from philotes_spark.similarity.ivfpq import build_ivfpq_index
-
-    c1, b1, coded1 = build_ivfpq_index(emb, seed=7)
-    c2, b2, coded2 = build_ivfpq_index(emb, seed=7)
+    c1, b1, coded1 = build(emb, **IVFPQ, seed=7)
+    c2, b2, coded2 = build(emb, **IVFPQ, seed=7)
     assert c1 == c2 and b1 == b2
     a = {r.id: (r.cell, tuple(r.codes)) for r in coded1.collect()}
     b = {r.id: (r.cell, tuple(r.codes)) for r in coded2.collect()}
-    coded1.unpersist(), coded2.unpersist()
+    release(coded1), release(coded2)
     assert a == b
     assert all(0 <= cell < 16 and len(codes) == 8 and all(0 <= x < 16 for x in codes)
                for cell, codes in a.values())
 
 
 def test_arrow_ivfpq_encode_row_identical_to_expr(emb):
-    """The Arrow-batched numpy IVF-PQ encode (r12 — serves
-    build_ivfpq_index, removing ~1024 interpreted lambda steps per row)
-    is row-identical to the pure-expression reference on the fixture:
+    """The Arrow-batched numpy IVF-PQ encode (r12 — serves the IVF-PQ
+    index, removing ~1024 interpreted lambda steps per row) is
+    row-identical to the pure-expression reference on the fixture:
     same cell and same m PQ codes for every corpus row. Both argmins
     break ties on the FIRST minimal codeword; drift between the
     sequential fold and numpy's pairwise sums sits far below any
     observed distance gap."""
-    from philotes_spark.similarity.ivfpq import (
-        encode_ivfpq,
-        encode_ivfpq_expr,
-        train_ivfpq,
-    )
-
-    centroids, books = train_ivfpq(emb, seed=7)
+    centroids, books = train(emb, **IVFPQ, seed=7)
     arrow = {
         r.id: (r.cell, tuple(r.codes))
-        for r in encode_ivfpq(emb, centroids, books).collect()
+        for r in encode(emb, centroids, books).collect()
     }
     expr = {
         r.id: (r.cell, tuple(r.codes))
@@ -229,8 +247,8 @@ def test_arrow_ivfpq_encode_row_identical_to_expr(emb):
 
 
 def test_arrow_ivf_assign_row_identical_to_expr(emb):
-    """The Arrow-batched numpy cell assignment (r17 — serves
-    build_index, removing n_centroids × dim interpreted lambda steps
+    """The Arrow-batched numpy cell assignment (r17 — serves the IVF
+    index, removing n_centroids × dim interpreted lambda steps
     per corpus row) is row-identical to the pure-expression
     assign_cells on the fixture: same cell for every corpus row, and
     the (v, nrm) columns it carries downstream are the SAME JVM
@@ -238,41 +256,48 @@ def test_arrow_ivf_assign_row_identical_to_expr(emb):
     bit-identical. Ties break identically (both pick the FIRST maximal
     cell); numpy's pairwise dot drift (~1e-15) sits far below any
     observed centroid-sim gap."""
-    from philotes_spark.similarity.ivf import assign_cells_arrow
-
-    cents = train_centroids(emb, 16)
+    cents, _ = train(emb, **IVF)
     expr = {
         r.id: (r.cell, tuple(r.v), r.nrm)
         for r in assign_cells(emb, cents).collect()
     }
     arrow = {
         r.id: (r.cell, tuple(r.v), r.nrm)
-        for r in assign_cells_arrow(emb, cents).collect()
+        for r in encode(emb, cents, None).collect()
     }
     assert arrow == expr
 
 
-@pytest.mark.parametrize(
-    "vecs",
-    [
-        # lengths 3+2+4 = 3*3: a reshape by the first length "fits"
-        [[1.0, 0.0, 0.0], [0.0, 1.0], [0.0, 0.0, 1.0, 1.0]],
-        [[1.0, 0.0, 0.0], None, [0.0, 0.0, 1.0]],
-    ],
-    ids=["ragged", "null"],
-)
-def test_arrow_ivf_assign_refuses_ragged_or_null_vectors(spark, vecs):
-    """One Arrow batch holding vectors of different lengths (or a null
-    vector) must fail loudly instead of being reshaped into the wrong
-    rows and assigned to the wrong cells."""
-    from philotes_spark.similarity.ivf import assign_cells_arrow
+# lengths 3+2+4 = 3*3: a reshape by the first length "fits"
+_RAGGED = [[1.0, 0.0, 0.0], [0.0, 1.0], [0.0, 0.0, 1.0, 1.0]]
+_NULL = [[1.0, 0.0, 0.0], None, [0.0, 0.0, 1.0]]
+_CELLS = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+_BOOKS = [[[0.0], [1.0]]] * 3  # m=3 subspaces of one dim, ks=2
 
+
+@pytest.mark.parametrize(
+    "vecs, centroids, books",
+    [
+        (_RAGGED, _CELLS, None),
+        (_NULL, _CELLS, None),
+        (_RAGGED, [[0.0] * 3], _BOOKS),
+        (_NULL, [[0.0] * 3], _BOOKS),
+        (_RAGGED, _CELLS, _BOOKS),
+        (_NULL, _CELLS, _BOOKS),
+    ],
+    # the IVF setting keeps this test's original ids
+    ids=["ragged", "null", "pq-ragged", "pq-null", "ivfpq-ragged", "ivfpq-null"],
+)
+def test_arrow_ivf_assign_refuses_ragged_or_null_vectors(spark, vecs, centroids, books):
+    """One Arrow batch holding vectors of different lengths (or a null
+    vector) must fail loudly in every encoder setting instead of being
+    reshaped into the wrong rows and assigned to the wrong cells and
+    codes."""
     emb = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id long, embedding array<double>"
     ).coalesce(1)
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
     with pytest.raises(Exception, match="non-null vectors of one length"):
-        assign_cells_arrow(emb, cents).collect()
+        encode(emb, centroids, books).collect()
 
 
 def test_arrow_cosine_topk_row_identical_to_jvm(emb):
@@ -294,6 +319,18 @@ def test_arrow_cosine_topk_row_identical_to_jvm(emb):
     assert jvm == arrow
 
 
+def _with_zero_vectors(spark, emb):
+    """``emb`` plus two all-zero vectors (ids 100001, 100002) at the end."""
+    from pyspark.sql import functions as F
+
+    dim = len(emb.select("embedding").first()[0])
+    zeros = spark.createDataFrame(
+        [(100001, [0.0] * dim), (100002, [0.0] * dim)],
+        "vec_id long, embedding array<double>",
+    ).select("vec_id", F.transform("embedding", lambda x: x.cast("float")).alias("embedding"))
+    return emb.select("vec_id", "embedding").unionByName(zeros)
+
+
 def test_zero_norm_vectors_excluded_identically(spark, emb):
     """ADVICE r11 #2: a zero vector has no direction — cosine against it
     is 0/0. Previously the JVM fold's NaN desc-sorted FIRST (topping
@@ -302,16 +339,9 @@ def test_zero_norm_vectors_excluded_identically(spark, emb):
     rows from queries and candidates: inject a zero corpus vector and a
     zero QUERY vector and the twins stay row-identical, the zero row
     never appears as a neighbor, and the zero query emits no rows."""
-    from pyspark.sql import functions as F
+    from philotes_spark.similarity.knn import cosine_topk_arrow
 
-    from philotes_spark.similarity.knn import cosine_topk, cosine_topk_arrow
-
-    dim = len(emb.select("embedding").first()[0])
-    zeros = spark.createDataFrame(
-        [(100001, [0.0] * dim), (100002, [0.0] * dim)],
-        "vec_id long, embedding array<double>",
-    ).select("vec_id", F.transform("embedding", lambda x: x.cast("float")).alias("embedding"))
-    poisoned = emb.select("vec_id", "embedding").unionByName(zeros)
+    poisoned = _with_zero_vectors(spark, emb)
     qids = QUERY_IDS + [100002]  # one zero-norm QUERY too
     jvm = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine_sim)
@@ -327,6 +357,26 @@ def test_zero_norm_vectors_excluded_identically(spark, emb):
     assert all(n not in (100001, 100002) for n, _ in jvm.values())
     # and the zero rows never top a ranking (the old NaN-first bug)
     assert all(sim == sim for _, sim in jvm.values())  # no NaN survives
+
+
+@pytest.mark.parametrize("setting", [IVF, PQ, IVFPQ], ids=["ivf", "pq", "ivfpq"])
+def test_ann_zero_norm_vectors_excluded(spark, emb, setting):
+    """The ANN core's one exclusion rule, in every setting: a zero
+    corpus vector and a zero query vector are left out of the training
+    sample (no NaN row in k-means, so no RuntimeWarning), the queries
+    and the candidates (nothing divides by zero under ANSI). The zero
+    rows are appended after the first rows, so the sample, the index
+    and every real query's rows equal those of the clean corpus."""
+    poisoned = _with_zero_vectors(spark, emb)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        index = build(poisoned, **setting)
+    clean = build(emb, **setting)
+    assert index[:2] == clean[:2]
+    got = topk(poisoned, QUERY_IDS + [100002], index, k=10).collect()
+    want = topk(emb, QUERY_IDS, clean, k=10).collect()
+    release(index[2]), release(clean[2])
+    assert got and got == want
 
 
 def test_filtered_topk_twins_row_identical_and_filtered(emb):
@@ -363,7 +413,7 @@ def test_filtered_topk_twins_row_identical_and_filtered(emb):
     assert jvm != unfiltered
 
 
-def test_filtered_ivf_recall_and_full_probe_exact(emb):
+def test_filtered_ivf_recall_and_full_probe_exact(emb, ivf_index):
     """Filtered IVF (r13): candidates are posting-list semi-joined to
     the predicate before scoring — every hit satisfies it — and probing
     ALL cells recovers the exact filtered ranking (the filter prunes
@@ -371,25 +421,21 @@ def test_filtered_ivf_recall_and_full_probe_exact(emb):
     against the filtered exact ground truth."""
     from pyspark.sql import functions as F
 
-    from philotes_spark.similarity.ivf import build_index, ivf_topk
-    from philotes_spark.similarity.knn import cosine_topk
-
     corpus = emb.filter(F.col("label") == 1)
     allowed = {r.vec_id for r in corpus.select("vec_id").collect()}
-    index = build_index(emb, n_centroids=16)
     exact = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine_sim)
         for r in cosine_topk(emb, QUERY_IDS, k=10, corpus=corpus).collect()
     }
     full = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine_sim)
-        for r in ivf_topk(
-            emb, QUERY_IDS, k=10, n_probe=16, index=index, corpus=corpus
+        for r in topk(
+            emb, QUERY_IDS, ivf_index, k=10, n_probe=16, corpus=corpus
         ).collect()
     }
     assert full == exact  # all cells probed == exact filtered
-    part = ivf_topk(
-        emb, QUERY_IDS, k=10, n_probe=8, index=index, corpus=corpus
+    part = topk(
+        emb, QUERY_IDS, ivf_index, k=10, n_probe=8, corpus=corpus
     ).collect()
     assert {r.neighbor_id for r in part} <= allowed
     got = {q: {r.neighbor_id for r in part if r.query_id == q}
@@ -400,4 +446,3 @@ def test_filtered_ivf_recall_and_full_probe_exact(emb):
         len(want[q]) for q in QUERY_IDS
     )
     assert recall >= 0.6, recall
-    index[1].unpersist()
